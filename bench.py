@@ -30,11 +30,6 @@ HEADLINE = [
     "x_dedup_minhash_lsh",
     "x_ann_brute_topk",
     "x_text_token_count",
-    # x_multimodal_decode_meta retired from the GRADED registry in the
-    # r16 capacity swap (slot funds x_url_canonical) but stays in the
-    # HEADLINE so the 12-query total remains byte-comparable across
-    # rounds: the function is unchanged, merely deregistered, and
-    # _resolve() falls back to the plans module for retired names
     "x_multimodal_decode_meta",
     "x_events_hourly",
     "x_events_sessionize",
@@ -42,143 +37,53 @@ HEADLINE = [
 
 #: timed and reported SEPARATELY (queries_extra / total_extra) so the
 #: 12-query HEADLINE total stays byte-comparable across every round's
-#: BENCH_r{N}.json. x_ann_ivf_topk is the ANN *scale* path (plan-literal
-#: centroid assignment — zero corpus shuffle; probe-pruned search) whose
-#: round-over-round timing series starts here; compare it against
-#: x_ann_brute_topk's O(Q×N) exactness baseline inside the same run.
+#: BENCH_r{N}.json. Pairs worth reading against each other in one run:
+#: x_ann_ivf_topk (probe-pruned scale path) vs x_ann_brute_topk;
+#: x_decontaminate_bloom vs x_decontaminate (same answer); the PQ rows
+#: vs x_ann_ivf_topk; the persisted-index rows (time includes the index
+#: build + write) vs their recompute twins; x_embed_near_dup (declared
+#: O(n^2) exactness baseline) vs the LSH-blocked x_ann_lsh_pairs; the
+#: codec rows (JPEG / PNG / GIF) against each other; and
+#: x_digit_quantiles (includes its histogram build) vs x_digit_hist.
 EXTRA = [
     "x_ann_ivf_topk",
-    # r5-added operators — timing series starts here
     "x_dedup_lines",
-    # x_events_session_window retired from the registry in the r13
-    # capacity swap (slot funds x_multimodal_frames); its native-
-    # session_window composition stays value-pinned in
-    # tests/test_retired_queries.py and its timing series ends at r12
     "x_text_entropy",
-    # r6-added — the map-only chunking pass (its r6 sibling
-    # x_ann_ivf_topk_quantized retired from the registry in the r12
-    # capacity swap; its int8-dequant composition stays value-pinned in
-    # tests/test_retired_queries.py and its timing series ends at r11)
     "x_doc_chunk",
-    # r7-added — compare x_decontaminate_bloom against x_decontaminate
-    # (same answer, plan-literal bitset prefilter vs broadcast join) in
-    # the same run; cross-corpus dedup and the split audit start their
-    # timing series here
     "x_decontaminate",
     "x_decontaminate_bloom",
     "x_dedup_cross",
     "x_train_val_split",
-    # PQ search — compare against x_ann_ivf_topk_quantized in the same
-    # run: codes-only ADC vs int8 dequant + full IVF
     "x_ann_pq_topk",
     "x_ann_ivfpq_topk",
-    # r8-added — the persisted-index ("build once, search many")
-    # faces: their per-run time still INCLUDES the index build+write
-    # (the driver contract is self-contained), so compare the warm
-    # series against the recompute twins above to read the amortized
-    # search cost; the partitioned IVF+PQ layout also prunes cell
-    # directories at the scan
-    # x_ann_pq_index_search retired from the registry in the r14
-    # capacity swap (slot funds x_audio_zero_crossings); its persisted-
-    # codes composition stays value-pinned in
-    # tests/test_retired_queries.py and its timing series ends at r13
     "x_ann_ivfpq_index_search",
-    # r8-added pipeline ops — timing series starts here
     "x_quality_model",
     "x_mixture_temperature",
-    # x_mixture_epoch retired from the registry in the r14 capacity
-    # swap (slot funds x_multimodal_resize_png); its materialized-epoch
-    # composition stays value-pinned in tests/test_retired_queries.py
-    # and its timing series ends at r13
-    # r9-added — timing series starts here: global corpus repetition
-    # top-k, the bucket-cap LSH twin (compare vs x_dedup_minhash_lsh's
-    # uncapped chain in the same run), the IVF quality rollup, and the
-    # per-source quality-gate report
     "x_corpus_ngram_topk",
-    # x_dedup_minhash_bucketcap retired from the registry in the r15
-    # capacity swap (slot funds x_validate_expectations); its capped-
-    # LSH composition stays value-pinned in tests/test_retired_queries.py
-    # and its timing series ends at r14
     "x_ann_ivf_cell_stats",
     "x_quality_gate_report",
     "x_strip_boilerplate",
-    # r9 registry swap — the two semantic-curation faces graded from
-    # this round: SemDeDup (cell-blocked matmul pairing + components)
-    # and embedding-space decontamination (plan-literal max-cos vs a
-    # 2% bench split, anti-join on the rare dirty side)
     "x_dedup_semantic",
     "x_decontaminate_embedding",
-    # r10 registry swap — the two span/line-granular dedup faces graded
-    # from this round: intra-doc line dedup (zero-shuffle projection)
-    # and ExactSubstr repeated-span removal (de-skewed groupBy-min
-    # keeper election over 120-bit span keys)
     "x_dedup_intradoc_lines",
     "x_dedup_repeated_spans",
-    # r10 perf-fix cohort — timing series starts here to track the two
-    # self-join fixes (shared blocking shuffle: the signature pipeline
-    # evaluates once, not per join branch; narrow pair rows) and the
-    # blocked-matmul exhaustive baseline (16.7 -> ~1.3 s warm at the
-    # fix). x_embed_near_dup is the declared O(n^2) exactness oracle —
-    # its cost scales quadratically BY CONTRACT; read it against the
-    # LSH-blocked x_ann_lsh_pairs in the same run.
     "x_ann_lsh_pairs",
     "x_dedup_simhash",
     "x_dedup_ngram_jaccard",
     "x_embed_near_dup",
-    # r12 registry swap — real baseline-JPEG entropy-decode + IDCT +
-    # resample inside mapInPandas (per-doc 159-byte payloads); timing
-    # series starts here
     "x_multimodal_resize_jpeg",
-    # r13 registry swap — timing series starts here (ADVICE r13: the
-    # swap removed the retiree from EXTRA but forgot to add the new
-    # graded query, so its container-walk + JPEG-decode cost had no
-    # round-over-round series through r13)
     "x_multimodal_frames",
-    # r14 registry swap — timing series starts here: the PNG palette
-    # decode (compare vs x_multimodal_resize_jpeg) and the audio FFT
-    # layer. x_events_sessionize_chunked retired from the registry in
-    # the r17 capacity swap (slot funds x_countmin_heavy); its chunk-
-    # and-stitch composition stays value-pinned in
-    # tests/test_retired_queries.py and its timing series ends at r16
     "x_multimodal_resize_png",
     "x_audio_zero_crossings",
-    # r15 registry swap — timing series starts here: the declarative
-    # quality-expectations report (one scan, N rules), the GIF LZW
-    # decode (compare vs the JPEG/PNG codec rows in the same run), and
-    # the bigram-LM scorer (compare vs x_text_unigram_logprob)
     "x_validate_expectations",
     "x_multimodal_resize_gif",
     "x_text_bigram_logprob",
-    # r16 registry swap — timing series starts here: URL
-    # canonicalization (pure string plan, zero exchanges expected),
-    # the recrawl merge (one co-partitioned full-outer shuffle), and
-    # SCD2 (dim+changes union through one per-key window). The r16
-    # retirees x_multimodal_resize / x_multimodal_audio leave no EXTRA
-    # gap (neither was in a bench list; their decode cost is carried
-    # by the _real / codec rows), and x_multimodal_decode_meta keeps
-    # its HEADLINE series via the retired-name fallback above.
     "x_url_canonical",
     "x_merge_upsert",
     "x_scd2_apply",
-    # r17 registry swap — timing series starts here: the mergeable-
-    # sketch grading rows (KMV distinct / grouped KMV / count-min
-    # probe). The r17 retirees g_cube_order_status / g_rollup_pricing
-    # leave no EXTRA gap (neither was in a bench list; their Expand-
-    # operator cost is carried by no registered row — grouping-sets
-    # family timing was never benchmarked), and the chunked-sessionize
-    # series ends above.
     "x_kmv_distinct",
     "x_kmv_grouped",
     "x_countmin_heavy",
-    # r18 registry swap — timing series starts here: the digit-sketch
-    # quantile face (histogram build + cumulative-bucket picks; the
-    # quantile row's time INCLUDES its histogram build, so read the
-    # pair's delta as the quantile-selection cost) and the RFC 9309
-    # robots decision fold. The r18 retirees x_dedup_exact /
-    # x_doc_fingerprint / x_text_unigram_logprob leave no EXTRA gap
-    # (none was in a bench list; exact-dedup cost is carried by
-    # x_dedup_fingerprint, the md5 normalization by the fingerprint
-    # rows, and the LM-fold cost by x_text_bigram_logprob).
     "x_digit_hist",
     "x_digit_quantiles",
     "x_robots_decisions",
@@ -229,39 +134,11 @@ def main() -> None:
         except Exception:  # noqa: BLE001 — telemetry must never fail a run
             return 0
 
-    # names allowed to resolve OUTSIDE the registry: retired-but-
-    # benchmarked rows only (HEADLINE continuity). Kept explicit so an
-    # ACCIDENTAL deregistration of any other benchmarked query fails
-    # loudly here instead of silently timing the module function.
-    RETIRED_BENCH = {"x_multimodal_decode_meta"}
-
-    def _resolve(name: str):
-        """Registry first; the explicit retired names fall back to
-        their unchanged plans-module function, the same resolution
-        tests/test_retired_queries.py uses."""
-        fn = QUERIES.get(name)
-        if fn is not None:
-            return fn
-        if name not in RETIRED_BENCH:
-            raise KeyError(
-                f"{name} is benchmarked but not registered (and not a "
-                "declared retired-bench name)"
-            )
-        from hive_scripts_spark.plans import (
-            extension_queries,
-            reference_queries,
-        )
-
-        for mod in (reference_queries, extension_queries):
-            if hasattr(mod, name):
-                return getattr(mod, name)
-        raise KeyError(name)
-
     def run_once(name: str) -> tuple[float | None, float]:
         steal0 = _steal_ticks()
         start = time.perf_counter()
         try:
-            _resolve(name)(spark, SF_DIR).write.format("noop").mode(
+            QUERIES[name](spark, SF_DIR).write.format("noop").mode(
                 "overwrite"
             ).save()
         except Exception as exc:  # noqa: BLE001 — isolate, report, go on

@@ -157,7 +157,7 @@ def cmd_sql(args: argparse.Namespace) -> int:
     the programmatic API."""
     from pathlib import Path
 
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-sql")
     db = Path(args.db)
@@ -183,7 +183,7 @@ def cmd_curate(args: argparse.Namespace) -> int:
         curate_documents,
         curation_report,
     )
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-curate")
     docs = load_sf_table(spark, args.db, "documents")
@@ -247,7 +247,7 @@ def cmd_chunk(args: argparse.Namespace) -> int:
     (the sequence-prep step before embedding / RAG indexing); writes
     the chunk table as parquet and prints shape stats."""
     from hive_scripts_spark.operators.textstats import chunk_documents
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-chunk")
     docs = load_sf_table(spark, args.db, "documents")
@@ -370,7 +370,7 @@ def cmd_semdedup(args: argparse.Namespace) -> int:
         semantic_dedup,
         train_kmeans,
     )
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-semdedup")
     emb = load_sf_table(spark, args.db, "embeddings")
@@ -428,7 +428,7 @@ def cmd_balance(args: argparse.Namespace) -> int:
         kmeans_fit,
         train_kmeans,
     )
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-balance")
     emb = load_sf_table(spark, args.db, "embeddings")
@@ -486,7 +486,7 @@ def cmd_mhindex(args: argparse.Namespace) -> int:
         minhash_index_build,
         minhash_index_dedup,
     )
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-mhindex")
     docs = load_sf_table(spark, args.db, "documents")
@@ -826,7 +826,7 @@ def cmd_sketch(args: argparse.Namespace) -> int:
     from pathlib import Path
 
     from hive_scripts_spark.operators import sketches as SK
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-sketch")
     if args.action == "build":
@@ -1011,7 +1011,7 @@ def cmd_bpe(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     from hive_scripts_spark.operators import tokenizer as T
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-bpe")
     docs = load_sf_table(spark, args.db, "documents")
@@ -1062,7 +1062,7 @@ def cmd_export(args: argparse.Namespace) -> int:
 
     from hive_scripts_spark.functions.canonical import shard_by_hash
     from hive_scripts_spark.operators.curation import curate_documents
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
     from hive_scripts_spark.sources.sinks import write_partitioned
 
     spark = get_spark("hive-scripts-spark-export")
@@ -1158,7 +1158,7 @@ def cmd_ann_build(args: argparse.Namespace) -> int:
     from pathlib import Path
 
     from hive_scripts_spark.operators import similarity as S
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-ann-build")
     emb = load_sf_table(spark, args.db, "embeddings")
@@ -1248,7 +1248,7 @@ def cmd_ann_search(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     from hive_scripts_spark.operators import similarity as S
-    from hive_scripts_spark.plans.registry import table as load_sf_table
+    from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-ann-search")
     idx = Path(args.index)

@@ -680,12 +680,17 @@ def embedding_lsh_pairs_portable(
     )
 
 
+#: max centroids :func:`ivf_assign` embeds as plan literals; above it the
+#: assignment routes to a numpy ``mapInPandas`` matmul.
+IVF_LITERAL_THRESHOLD = 256
+
+
 def ivf_assign(
     embeddings: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    literal_threshold: int = 256,
+    literal_threshold: int = IVF_LITERAL_THRESHOLD,
     _model: list | None = None,
 ) -> DataFrame:
     """IVF coarse assignment: each vector to its max-cosine centroid.
@@ -879,7 +884,7 @@ def cluster_balanced_sample(
     cap_per_cell: int = 100,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    literal_threshold: int = 256,
+    literal_threshold: int = IVF_LITERAL_THRESHOLD,
     salts: int = 32,
 ) -> DataFrame:
     """Cluster-balanced subsampling (topic balancing): at most
@@ -1034,7 +1039,7 @@ def semantic_dedup(
     # form ran a separate limit(1).count() job before ivf_assign's own
     # collect over the same tiny model frame (VERDICT r19 item 3: one
     # sequential driver-blocking job removed from the chain).
-    model = centroids.limit(257).collect()  # ivf_assign's default +1
+    model = centroids.limit(IVF_LITERAL_THRESHOLD + 1).collect()
     if not model:
         if embeddings.limit(1).count() == 0:
             # empty-in/empty-out: an empty incremental batch through a
@@ -1219,7 +1224,7 @@ def embedding_decontaminate(
     vec_col: str = "embedding",
     bench_id_col: str = "vec_id",
     bench_vec_col: str = "embedding",
-    literal_threshold: int = 256,
+    literal_threshold: int = IVF_LITERAL_THRESHOLD,
 ) -> DataFrame:
     """Semantic decontamination: drop corpus rows whose embedding is
     within cosine ``threshold`` of ANY benchmark embedding.

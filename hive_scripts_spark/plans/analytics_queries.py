@@ -12,19 +12,27 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hive_scripts_spark.operators.asof import asof_join
-from hive_scripts_spark.plans.registry import register, table
+from hive_scripts_spark.plans.registry import register
+from hive_scripts_spark.sources.readers import table
 
 # ---------------------------------------------------------------------------
 # multi-dimensional aggregation
 # ---------------------------------------------------------------------------
 
 
+@register(
+    "g_rollup_pricing",
+    oracle="""
+    select l_returnflag, l_linestatus,
+           count(*) as n_items,
+           cast(sum(cast(l_quantity as decimal(18,2))) as double) as sum_qty
+    from lineitem
+    group by rollup(l_returnflag, l_linestatus)
+    """,
+)
 def g_rollup_pricing(spark, sf_dir):
-    """[retired from the graded registry in the r17 capacity swap —
-    slot funds ``x_kmv_grouped``; ROLLUP is grouping-sets sugar over
-    the same Expand operator, so the family stays graded by the richer
-    ``g_grouping_sets``, and this row stays value-pinned against its
-    frozen r14 oracle in ``tests/test_retired_queries.py``]"""
+    """ROLLUP over (returnflag, linestatus): grouping-sets sugar over
+    the same Expand operator as ``g_grouping_sets``."""
     li = table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -32,12 +40,17 @@ def g_rollup_pricing(spark, sf_dir):
     )
 
 
+@register(
+    "g_cube_order_status",
+    oracle="""
+    select o_orderstatus, o_orderpriority, count(*) as n_orders
+    from orders
+    group by cube(o_orderstatus, o_orderpriority)
+    """,
+)
 def g_cube_order_status(spark, sf_dir):
-    """[retired from the graded registry in the r17 capacity swap —
-    slot funds ``x_kmv_distinct``; CUBE is grouping-sets sugar over
-    the same Expand operator, so the family stays graded by the richer
-    ``g_grouping_sets``, and this row stays value-pinned against its
-    frozen r14 oracle in ``tests/test_retired_queries.py``]"""
+    """CUBE over (orderstatus, orderpriority): grouping-sets sugar over
+    the same Expand operator as ``g_grouping_sets``."""
     orders = table(spark, sf_dir, "orders")
     return orders.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders")

@@ -21,19 +21,23 @@ from hive_scripts_spark.plans.oracle_helpers import (
     duck_fingerprint,
     duck_hash_bucket,
 )
-from hive_scripts_spark.plans.registry import register, table
+from hive_scripts_spark.plans.registry import ORACLES, register
+from hive_scripts_spark.sources.readers import table
 
 # ---------------------------------------------------------------------------
 # dedup
 # ---------------------------------------------------------------------------
 
 
+@register(
+    "x_dedup_exact",
+    oracle="""
+    select min(doc_id) as doc_id, count(*) as n_dups
+    from documents group by text
+    """,
+)
 def x_dedup_exact(spark, sf_dir):
-    """[retired from the graded registry in the r18 capacity swap —
-    slot funds ``x_digit_hist``; the one-groupBy exact dedup is the
-    literal first stage of the still-registered ``x_dedup_fingerprint``
-    / ``x_dedup_lines`` family, and this row stays value-pinned against
-    its frozen r15 oracle in ``tests/test_retired_queries.py``]"""
+    """Exact dedup on raw text: one groupBy, min doc_id survives."""
     docs = table(spark, sf_dir, "documents")
     return D.exact_dedup(docs, ["text"])
 
@@ -476,15 +480,12 @@ def x_dedup_minhash_portable(spark, sf_dir):
     return D.minhash_lsh_pairs_portable(docs, threshold=0.2)
 
 
+@register(
+    "x_dedup_minhash_bucketcap",
+    oracle=f"{_duck_minhash_verified(2)} select a_id, b_id, jaccard from mh_verified",
+)
 def x_dedup_minhash_bucketcap(spark, sf_dir):
-    """[retired from the graded registry in the r15 capacity swap —
-    slot funds ``x_validate_expectations``; the cap is exercised by
-    every capped production call, the md5 chain stays graded end-to-end
-    by ``x_dedup_minhash_portable``, and this exact capped composition
-    stays value-pinned against its frozen r12 oracle in
-    ``tests/test_retired_queries.py``]
-
-    The degenerate-bucket guard (``max_bucket_size``) made value-
+    """The degenerate-bucket guard (``max_bucket_size``) made value-
     gradable: the portable MinHash-LSH pipeline pairing only inside
     (band, bucket) groups of ≤ 2 docs — oversized buckets (boilerplate
     signatures, the m²/2-candidate skew risk at corpus scale) are
@@ -693,13 +694,12 @@ def x_text_bpe_token_count(spark, sf_dir):
     return docs.select("doc_id", X.bpe_ish_token_count("text").alias("n_bpe_tokens"))
 
 
+@register(
+    "x_doc_fingerprint",
+    oracle=f"select doc_id, md5({_NORM}) as content_md5 from documents",
+)
 def x_doc_fingerprint(spark, sf_dir):
-    """[retired from the graded registry in the r18 capacity swap —
-    slot funds ``x_digit_quantiles``; the per-doc whitespace-normalized
-    ``content_md5`` is the same md5-family normalization graded by
-    ``x_dedup_fingerprint`` and ``a3_table_fingerprint``, and this row
-    stays value-pinned against its frozen r15 oracle in
-    ``tests/test_retired_queries.py``]"""
+    """Per-doc md5 of the whitespace-normalized text."""
     docs = table(spark, sf_dir, "documents")
     return X.doc_fingerprint(docs).select("doc_id", "content_md5")
 
@@ -801,12 +801,22 @@ def x_text_langid(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+@register(
+    "x_multimodal_decode_meta",
+    oracle="""
+    select doc_id,
+           strlen(text) as byte_len,
+           md5(text) as content_md5,
+           cast(1 + cast(('0x' || substr(md5(text), 1, 4)) as int) % 1024 as int)
+             as width,
+           cast(1 + cast(('0x' || substr(md5(text), 5, 4)) as int) % 1024 as int)
+             as height
+    from documents
+    """,
+)
 def x_multimodal_decode_meta(spark, sf_dir):
-    """[retired from the graded registry in the r16 capacity swap —
-    slot funds ``x_url_canonical``; the decode-meta family stays graded
-    by ``x_multimodal_decode_real`` (real P6 header parse on framed
-    payloads), and this fake-mode plumbing row stays value-pinned
-    against its frozen r13 oracle in ``tests/test_retired_queries.py``]"""
+    """Fake-mode decode plumbing: synthetic dims from the payload md5
+    (``x_multimodal_decode_real`` grades the real header parse)."""
     docs = table(spark, sf_dir, "documents")
     return M.decode_image_meta(
         M.binarize(docs, "text"),
@@ -861,13 +871,19 @@ def x_multimodal_decode_real(spark, sf_dir):
     )
 
 
+@register(
+    "x_multimodal_resize",
+    oracle="""
+    select doc_id,
+           cast(224 as int) as width,
+           cast(224 as int) as height,
+           md5(text || '224x224') as resized_md5
+    from documents
+    """,
+)
 def x_multimodal_resize(spark, sf_dir):
-    """[retired from the graded registry in the r16 capacity swap —
-    slot funds ``x_merge_upsert``; the decode+resize family stays
-    graded by ``x_multimodal_resize_real`` and the codec triple
-    (``x_multimodal_resize_jpeg``/``_png``/``_gif``), and this
-    fake-mode plumbing row stays value-pinned against its frozen r13
-    oracle in ``tests/test_retired_queries.py``]"""
+    """Fake-mode resize plumbing (``x_multimodal_resize_real`` and the
+    codec rows grade the real decode + resize)."""
     docs = table(spark, sf_dir, "documents")
     return M.resize_images(
         M.binarize(docs, "text"),
@@ -877,13 +893,24 @@ def x_multimodal_resize(spark, sf_dir):
     )
 
 
+@register(
+    "x_multimodal_audio",
+    oracle="""
+    select doc_id,
+           strlen(text) as n_samples,
+           cast(strlen(text) as double) / cast(16000 as double) as duration_s,
+           case when strlen(text) = 0 then cast(0.0 as double)
+                else sqrt(
+                  cast(list_sum(list_transform(string_split_regex(text, ''),
+                                               c -> unicode(c) * unicode(c)))
+                       as double)
+                  / cast(strlen(text) as double)) end as rms_energy
+    from documents
+    """,
+)
 def x_multimodal_audio(spark, sf_dir):
-    """[retired from the graded registry in the r16 capacity swap —
-    slot funds ``x_scd2_apply``; the audio family stays graded by
-    ``x_multimodal_audio_real`` (real 8-bit PCM decode) and
-    ``x_audio_zero_crossings``, and this fake-mode plumbing row stays
-    value-pinned against its frozen r13 oracle in
-    ``tests/test_retired_queries.py``]"""
+    """Fake-mode audio plumbing: text bytes as 16 kHz samples
+    (``x_multimodal_audio_real`` grades the real PCM decode)."""
     docs = table(spark, sf_dir, "documents")
     return M.audio_features(
         M.binarize(docs, "text"),
@@ -892,13 +919,29 @@ def x_multimodal_audio(spark, sf_dir):
     )
 
 
+@register(
+    "x_ann_ivf_assign",
+    oracle="""
+    with centroids as (
+      select vec_id as centroid_id, cast(embedding as double[]) as c
+      from embeddings where vec_id < 8
+    ), scored as (
+      select e.vec_id, c.centroid_id,
+             round(list_dot_product(cast(e.embedding as double[]), c.c)
+                   / (sqrt(list_dot_product(cast(e.embedding as double[]),
+                                            cast(e.embedding as double[])))
+                      * sqrt(list_dot_product(c.c, c.c))), 6) as sim
+      from embeddings e cross join centroids c
+    ), ranked as (
+      select *, row_number() over (
+        partition by vec_id order by sim desc, centroid_id) as rn
+      from scored
+    )
+    select vec_id, centroid_id, sim from ranked where rn = 1
+    """,
+)
 def x_ann_ivf_assign(spark, sf_dir):
-    """[retired from the graded registry in the r15 capacity swap —
-    slot funds ``x_multimodal_resize_gif``; the centroid-assignment
-    step rides inside the graded ``x_ann_ivf_topk`` and
-    ``x_ann_ivf_cell_stats`` compositions, and this standalone assign
-    row stays value-pinned against its frozen r12 oracle in
-    ``tests/test_retired_queries.py``]"""
+    """IVF coarse assignment: each vector's nearest of 8 centroids."""
     emb = table(spark, sf_dir, "embeddings")
     centroids = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"),
@@ -1427,16 +1470,9 @@ def x_events_sessionize(spark, sf_dir):
     return sessionize_events(ev)
 
 
+@register("x_events_sessionize_chunked", oracle=ORACLES["x_events_sessionize"])
 def x_events_sessionize_chunked(spark, sf_dir):
-    """[retired from the graded registry in the r17 capacity swap —
-    slot funds ``x_countmin_heavy``; a literal answer-twin of the
-    still-registered ``x_events_sessionize`` (it was graded against
-    the SAME oracle text — the physical-plan divergence is what the
-    pytest chunk/single bit-identity pin in ``test_properties.py``
-    proves, not the value surface), and this row stays value-pinned
-    against its frozen r14 oracle in ``tests/test_retired_queries.py``]
-
-    The r13 time-chunked sessionize escalation
+    """The time-chunked sessionize escalation
     (``operators/sessions.sessionize_events(chunk_hours=6)``) graded
     against the SAME DuckDB oracle as ``x_events_sessionize``: per-
     (user, 6h-chunk) gap-merge, then only boundary sessions cross-
@@ -1444,10 +1480,7 @@ def x_events_sessionize_chunked(spark, sf_dir):
     rows — the skew escape for a ~100M-event bot user where a single
     per-user window would serialize on one task. An engine-independent
     grade for the escalation plan itself, not just the pytest
-    bit-identity pin against the single-window form. Registered in the
-    r14 capacity swap (retiring ``a4_stratified_sample``) after
-    sitting parity-verified at sf0.001 AND sf0.01 in
-    ``tests/test_queued_r14.py`` through round 13."""
+    bit-identity pin against the single-window form."""
     from hive_scripts_spark.operators.sessions import sessionize_events
 
     ev = table(spark, sf_dir, "events")
@@ -1497,6 +1530,16 @@ def x_events_session_stats(spark, sf_dir):
     )
 
 
+@register(
+    "x_events_session_window",
+    oracle=f"""{_DUCK_SESSIONIZE}
+    select user_id,
+           min(ts) as session_start,
+           max(ts) + interval 30 minute as session_end,
+           cast(count(*) as bigint) as n_events
+    from numbered group by user_id, session_id
+    """,
+)
 def x_events_session_window(spark, sf_dir):
     """Gap-merged sessions via Spark's native ``session_window`` — the
     batch face of the streaming session operator
@@ -1505,17 +1548,7 @@ def x_events_session_window(spark, sf_dir):
     exactly-gap-apart pair stays in one session; locked by
     ``test_session_streaming.py``); the output differs only in shape:
     ``session_end`` here is last-event + gap per ``session_window``'s
-    window close, not the last event time.
-
-    RETIRED from the graded registry in the r13 capacity swap (slot
-    funds ``x_multimodal_frames``; COVERAGE.md "Registry capacity").
-    Retirement choice verified against strict rotation: it was in the
-    r13 stale set (last green r10) so the swap keeps
-    ``compute_front_order(strict=True)`` clean, while its semantics
-    remain triple-covered — the frozen r10 oracle in
-    ``tests/test_retired_queries.py``, the still-graded
-    ``x_events_sessionize``/``x_events_session_stats`` family, and the
-    stream-vs-batch parity pin in ``test_session_streaming.py``."""
+    window close, not the last event time."""
     from hive_scripts_spark.streaming.sessions import session_window_counts
 
     ev = table(spark, sf_dir, "events")
@@ -1528,15 +1561,51 @@ def x_events_session_window(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+@register(
+    "x_curation_pipeline",
+    oracle=r"""
+    with base as (
+      -- stage 1: exact dedup on normalized content (min doc_id survives,
+      -- and its raw text — arg_min keeps the survivor's own payload)
+      select min(doc_id) as doc_id, arg_min(text, doc_id) as text
+      from documents
+      group by md5(trim(regexp_replace(regexp_replace(text, chr(13), '', 'g'), '\s+', ' ', 'g')))
+    ), toks as (
+      select doc_id, text,
+             case when length(trim(regexp_replace(regexp_replace(text, chr(13), '', 'g'), '\s+', ' ', 'g'))) = 0 then cast([] as varchar[])
+                  else string_split(trim(regexp_replace(regexp_replace(text, chr(13), '', 'g'), '\s+', ' ', 'g')), ' ') end as t,
+             case when length(trim(lower(text))) = 0 then cast([] as varchar[])
+                  else string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') end as lt
+      from base
+    ), feat as (
+      -- stage 2: quality gate (alpha ratio ≥ 0.5 and ≥ 10 tokens)
+      select doc_id, t, lt,
+             cast(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) as double)
+               / greatest(length(text), 1) as alpha_ratio
+      from toks
+    ), gated as (
+      select * from feat where alpha_ratio >= 0.5 and len(t) >= 10
+    ), lang as (
+      -- stage 3: language-ID
+      select doc_id, len(t) as n_tokens,
+             len(list_filter(lt, w -> list_contains(['das', 'der', 'die', 'ein', 'ist', 'nicht', 'und'], w))) as hits_de,
+             len(list_filter(lt, w -> list_contains(['a', 'and', 'in', 'is', 'of', 'the', 'to'], w))) as hits_en,
+             len(list_filter(lt, w -> list_contains(['de', 'el', 'en', 'la', 'los', 'que', 'y'], w))) as hits_es,
+             len(list_filter(lt, w -> list_contains(['de', 'des', 'et', 'la', 'le', 'les', 'un'], w))) as hits_fr,
+             len(list_filter(lt, w -> list_contains(['了', '和', '在', '我', '是', '有', '的'], w))) as hits_zh
+      from gated
+    )
+    select case when greatest(hits_de, hits_en, hits_es, hits_fr, hits_zh) = 0 then 'und' when hits_de = greatest(hits_de, hits_en, hits_es, hits_fr, hits_zh) then 'de' when hits_en = greatest(hits_de, hits_en, hits_es, hits_fr, hits_zh) then 'en' when hits_es = greatest(hits_de, hits_en, hits_es, hits_fr, hits_zh) then 'es' when hits_fr = greatest(hits_de, hits_en, hits_es, hits_fr, hits_zh) then 'fr' when hits_zh = greatest(hits_de, hits_en, hits_es, hits_fr, hits_zh) then 'zh' end as predicted_lang,
+           count(*) as n_docs,
+           cast(sum(n_tokens) as bigint) as total_tokens
+    from lang
+    group by all
+    """,
+)
 def x_curation_pipeline(spark, sf_dir):
-    """Filter → dedup → language-partition → token budget, end to end.
-
-    RETIRED from the graded registry in the r10 capacity swap: a strict
-    subset of `x_curation_full` (which adds decontamination + repetition
-    gates around the identical dedup/quality/lang-rollup stages), so the
-    family stays graded by the richer chain while this row's slot funds
-    `x_dedup_repeated_spans`. Still value-checked against its exact r9
-    oracle SQL in `tests/test_retired_queries.py`.
+    """Filter → dedup → language-partition → token budget, end to end
+    (a subset of ``x_curation_full``, which adds decontamination and
+    repetition gates around the same stages).
 
     Every stage is partition-parallel: dedup is a hash-groupBy on the
     content hash; the quality gate and language-ID are projections; the
@@ -1825,11 +1894,61 @@ def x_ann_ivf_topk(spark, sf_dir):
     )
 
 
-# RETIRED from the graded registry r12 (one-in-one-out capacity swap:
-# slot funds x_multimodal_resize_jpeg; COVERAGE.md "Registry capacity").
-# The int8-dequant composition stays value-checked against this exact
-# oracle in tests/test_retired_queries.py; x_ann_ivf_topk grades the
-# IVF plan shape and x_ann_pq_topk the compressed-search family.
+@register(
+    "x_ann_ivf_topk_quantized",
+    oracle="""
+    with corpus0 as (
+      select vec_id, cast(embedding as double[]) as v from embeddings
+    ), bounds as (
+      select vec_id, v, list_min(v) as lo, list_max(v) as hi from corpus0
+    ), recon as (
+      -- int8-range quantize then dequantize: the corpus the search sees
+      select vec_id,
+             case when hi = lo then list_transform(v, x -> lo)
+                  else list_transform(v, x -> lo +
+                    cast(floor((x - lo) * 255.0 / (hi - lo) + 0.5) as int)
+                    * ((hi - lo) / 255.0)) end as v
+      from bounds
+    ), centroids as (
+      select vec_id as cid, cast(embedding as double[]) as c
+      from embeddings where vec_id < 8
+    ), assign as (
+      select vec_id as neighbor_id, cell from (
+        select r.vec_id, c.cid as cell, row_number() over (
+          partition by r.vec_id order by
+            round(list_dot_product(r.v, c.c)
+                  / (sqrt(list_dot_product(r.v, r.v))
+                     * sqrt(list_dot_product(c.c, c.c))), 6) desc, c.cid
+        ) as rn
+        from recon r cross join centroids c) where rn = 1
+    ), probes as (
+      -- queries ride FULL-precision (asymmetric distance)
+      select vec_id as query_id, cell from (
+        select q.vec_id, c.cid as cell, row_number() over (
+          partition by q.vec_id order by
+            round(list_dot_product(q.v, c.c)
+                  / (sqrt(list_dot_product(q.v, q.v))
+                     * sqrt(list_dot_product(c.c, c.c))), 6) desc, c.cid
+        ) as rn
+        from corpus0 q cross join centroids c where q.vec_id < 10)
+      where rn <= 2
+    ), cand as (
+      select p.query_id, a.neighbor_id,
+             round(list_dot_product(q.v, r.v)
+                   / (sqrt(list_dot_product(q.v, q.v))
+                      * sqrt(list_dot_product(r.v, r.v))), 6) as cosine_sim
+      from probes p
+      join assign a on a.cell = p.cell and a.neighbor_id <> p.query_id
+      join corpus0 q on q.vec_id = p.query_id
+      join recon r on r.vec_id = a.neighbor_id
+    ), ranked as (
+      select query_id, neighbor_id, cosine_sim, row_number() over (
+        partition by query_id order by cosine_sim desc, neighbor_id) as rank
+      from cand
+    )
+    select query_id, neighbor_id, cosine_sim, rank from ranked where rank <= 5
+    """,
+)
 def x_ann_ivf_topk_quantized(spark, sf_dir):
     """The memory-lean ANN path under the driver gate: IVF search over
     the int8-QUANTIZED corpus (4x smaller index), dequantized on the fly
@@ -2008,19 +2127,32 @@ def x_events_funnel(spark, sf_dir):
     )
 
 
+@register(
+    "x_events_hourly_dense",
+    oracle="""
+    with bounds as (
+      select date_trunc('hour', min(ts)) as lo,
+             date_trunc('hour', max(ts)) as hi
+      from events
+    ), hours as (
+      select unnest(generate_series(lo, hi, interval 1 hour)) as hour
+      from bounds
+    ), agg as (
+      select date_trunc('hour', ts) as hour,
+             cast(count(*) as bigint) as n_events
+      from events where event_type = 'purchase' group by 1
+    )
+    select h.hour, coalesce(a.n_events, 0) as n_events
+    from hours h left join agg a on h.hour = a.hour
+    """,
+)
 def x_events_hourly_dense(spark, sf_dir):
     """Gap-filled hourly purchase counts: densify the time axis with
     ``sequence`` + ``explode`` so silent hours appear as explicit zero
     rows (dashboards and anomaly detectors need the gaps, not their
     absence). The hour spine is generated from a 1-row bounds aggregate
     — O(hours) rows — and left-joins the sparse counts; the counts side
-    is the only corpus-sized exchange.
-
-    Retired from the graded registry in r9 (one-in-one-out capacity
-    swap): the sparse twin `x_events_hourly` keeps the family's driver
-    row, the zero-gap spine mechanics stay pinned in
-    `tests/test_skew_soak.py`, and the full old oracle comparison moved
-    to `tests/test_retired_queries.py`."""
+    is the only corpus-sized exchange."""
     ev = table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.date_trunc("hour", F.min("ts")).alias("lo"),
@@ -2301,14 +2433,31 @@ def _temperature_agg(spark, sf_dir):
     )
 
 
+@register(
+    "x_mixture_epoch",
+    oracle=f"""{_DUCK_TEMPERATURE}
+    , assigned as (
+      select d.doc_id, d.source,
+             w.upsample_factor * 1.0 as f,
+             cast(('0x' || substr(
+                 md5('mix' || chr(1) || cast(d.doc_id as varchar)), 1, 15))
+                  as bigint) % 1000000 as b
+      from documents d join tw w using (source)
+    ), copies as (
+      select doc_id, source,
+             cast(floor(f) as bigint)
+             + case when b < cast(round((f - floor(f)) * 1000000, 0) as bigint)
+                    then 1 else 0 end as n
+      from assigned
+    )
+    select doc_id, source,
+           cast(unnest(generate_series(1, n)) as int) as copy_no
+    from copies
+    where n >= 1
+    """,
+)
 def x_mixture_epoch(spark, sf_dir):
-    """[retired from the graded registry in the r14 capacity swap —
-    slot funds ``x_multimodal_resize_png``; the temperature-mixture
-    family stays graded by ``x_mixture_temperature`` and this exact
-    materialization stays value-pinned against its frozen r11 oracle
-    in ``tests/test_retired_queries.py``]
-
-    One materialized epoch of the alpha=0.5 temperature mixture
+    """One materialized epoch of the alpha=0.5 temperature mixture
     (`functions/canonical.py mixture_materialize`): every doc appears
     floor(f) times plus one more for the deterministic frac(f) md5
     bucket of its source, f = the source's upsample factor — so
@@ -2517,19 +2666,40 @@ def x_doc_polyhash(spark, sf_dir):
     return toks.select("doc_id", poly.alias("poly_hash"))
 
 
+@register(
+    "x_text_unigram_logprob",
+    oracle=r"""
+    with toks0 as (
+      select doc_id, string_split(trim(regexp_replace(regexp_replace(text, chr(13), '', 'g'), '\s+', ' ', 'g')), ' ') as ws
+      from documents where length(trim(regexp_replace(regexp_replace(text, chr(13), '', 'g'), '\s+', ' ', 'g'))) > 0
+    ), positions as (
+      select doc_id, ws, unnest(range(1, len(ws) + 1)) as pos from toks0
+    ), toks as (
+      select doc_id, pos, ws[pos] as term from positions
+    ), counts as (
+      select term, count(*) as c from toks group by term
+    ), total as (
+      select cast(sum(c) as double) as total from counts
+    ), scored as (
+      select doc_id, pos,
+             log2(cast(c as double) / (select total from total)) as lp
+      from toks join counts using (term)
+    ), packed as (
+      select doc_id, list(lp order by pos) as seq from scored group by doc_id
+    )
+    select doc_id,
+           cast(len(seq) as bigint) as n_tokens,
+           round(-list_reduce(list_prepend(0.0, seq), (a, b) -> a + b)
+                 / len(seq), 6) as mean_neg_logprob
+    from packed
+    """,
+)
 def x_text_unigram_logprob(spark, sf_dir):
     """Unigram-LM quality score (the 'perplexity filter' stand-in): mean
     negative log2 corpus-unigram probability per document. Token
     log-probs are reassembled in POSITION order and folded sequentially
     on both engines, so the float sum is summation-order-deterministic
-    (a bare groupBy().sum() would hash-flake).
-
-    [retired from the graded registry in the r18 capacity swap — slot
-    funds ``x_robots_decisions``; the LM-scoring family stays graded
-    one order up by the richer ``x_text_bigram_logprob`` (same
-    position-ordered fold discipline), and this row stays value-pinned
-    against its frozen r15 oracle in
-    ``tests/test_retired_queries.py``]"""
+    (a bare groupBy().sum() would hash-flake)."""
     docs = table(spark, sf_dir, "documents")
     return X.unigram_logprob_score(docs)
 
@@ -2576,10 +2746,7 @@ def x_text_bigram_logprob(spark, sf_dir):
     add-k-smoothed corpus bigram conditionals
     ``(c(w1,w2)+k) / (c(w1)+k*V)``, folded per document in POSITION
     order — the unigram scorer's summation-order determinism contract
-    one LM order up, so the float fold is bit-identical across engines.
-    Registered in the r15 capacity swap (retiring
-    ``j_semi_nations_with_suppliers``) after sitting parity-verified at
-    sf0.001 AND sf0.01 in ``tests/test_queued_r15.py`` through r14."""
+    one LM order up, so the float fold is bit-identical across engines."""
     docs = table(spark, sf_dir, "documents")
     return X.bigram_logprob_score(docs, k=0.5)
 
@@ -2872,14 +3039,19 @@ def x_dedup_components_exact(spark, sf_dir):
     return connected_components(pairs)
 
 
+@register(
+    "x_length_histogram",
+    oracle="""
+    select cast(n_chars - (n_chars % 100) as bigint) as bucket,
+           count(*) as n_docs,
+           cast(sum(n_chars) as bigint) as sum_chars
+    from documents
+    group by 1
+    """,
+)
 def x_length_histogram(spark, sf_dir):
     """Document-length histogram (100-char buckets) — the dataset-shape
-    report a curation run starts from. Exact integer bucket math.
-
-    Retired from the graded registry in r9 (one-in-one-out capacity
-    swap): superseded by the richer `x_doc_length_profile` percentile
-    report; `textstats.length_histogram` keeps its pytest and this form
-    keeps its value check in `tests/test_retired_queries.py`."""
+    report a curation run starts from. Exact integer bucket math."""
     from hive_scripts_spark.operators.textstats import length_histogram
 
     return length_histogram(table(spark, sf_dir, "documents"))
@@ -3092,8 +3264,8 @@ def x_multimodal_resize_jpeg(spark, sf_dir):
 
 #: four 2-bit PLTE-indexed 8x8 constant-color PNGs (one per palette
 #: entry; shared IHDR/PLTE, only the IDAT differs) generated by the
-#: test encoder — re-derived in tests/test_queued_r14.py's
-#: test_queued_png_literals so an edit to either side fails loudly.
+#: test encoder — re-derived in tests/test_multimodal.py's
+#: test_png_plan_literals so an edit to either side fails loudly.
 #: Palette components all < 128 (md5-portable rule).
 _PNG_PALETTE = ((17, 34, 51), (68, 85, 102), (85, 102, 119), (102, 119, 126))
 _PNG_CONST_HEX = {
@@ -3154,10 +3326,7 @@ def x_multimodal_resize_png(spark, sf_dir):
     resized buffer's md5 in pure SQL (4 copies of the palette RGB, all
     components < 128 — the established md5-portable rule). The
     remaining depth/type pairs (1/4/8/16-bit, gray/RGB(A), Adam7) stay
-    round-trip pytest against the independent test encoder. Registered
-    in the r14 capacity swap (retiring ``x_mixture_epoch``) after
-    sitting parity-verified at sf0.001 AND sf0.01 in
-    ``tests/test_queued_r14.py`` through round 13."""
+    round-trip pytest against the independent test encoder."""
     docs = table(spark, sf_dir, "documents")
     framed = docs.select(
         "doc_id",
@@ -3177,7 +3346,7 @@ def x_multimodal_resize_png(spark, sf_dir):
 
 #: four constant-index 8x8 GIF89a literals over one shared 4-entry
 #: palette (components < 128, md5-portable rule) generated by the
-#: independent test encoder — tests/test_queued_r15.py re-derives them
+#: independent test encoder — tests/test_multimodal.py re-derives them
 #: so an edit to either side fails loudly
 _GIF_PALETTE = ((18, 35, 52), (69, 86, 103), (86, 103, 120), (103, 120, 127))
 _GIF_CONST_HEX = {
@@ -3230,10 +3399,7 @@ def x_multimodal_resize_gif(spark, sf_dir):
     buffer's md5 in pure SQL (4 copies of the palette RGB, all
     components < 128 — the established md5-portable rule). The wider
     GIF surface (interlace, local palettes, frame disposal) stays
-    round-trip pytest against the independent test encoder. Registered
-    in the r15 capacity swap (retiring ``x_ann_ivf_assign``) after
-    sitting parity-verified at sf0.001 AND sf0.01 in
-    ``tests/test_queued_r15.py`` through r14."""
+    round-trip pytest against the independent test encoder."""
     docs = table(spark, sf_dir, "documents")
     framed = docs.select(
         "doc_id",
@@ -3315,10 +3481,7 @@ def x_multimodal_frames(spark, sf_dir):
     ``(doc_id + k) % 4``; ``extract_frames`` walks the actual RIFF
     ``movi`` chunk list and JPEG-decodes each sampled frame's
     dimensions, and the oracle recomputes every sampled frame's
-    md5/width/height from compile-time constants. Registered in the
-    r13 capacity swap (retiring ``x_events_session_window``) after
-    sitting parity-verified at sf0.001 AND sf0.01 in
-    ``tests/test_queued_r13.py`` through round 12."""
+    md5/width/height from compile-time constants."""
 
     def frame(k):
         rem = F.pmod(F.col("doc_id") + k, F.lit(4))
@@ -3430,11 +3593,7 @@ def x_audio_zero_crossings(spark, sf_dir):
     decode + zero-crossing count, and value-check n_samples / ZCR
     against exact byte arithmetic. The spectral columns (centroid,
     bandwidth, rolloff) stay value-checked by the analytic-oracle
-    pytest (sines at exact FFT bins), which SQL cannot express.
-    Registered in the r14 capacity swap (retiring
-    ``x_ann_pq_index_search``) after sitting parity-verified at
-    sf0.001 AND sf0.01 in ``tests/test_queued_r14.py`` through round
-    13."""
+    pytest (sines at exact FFT bins), which SQL cannot express."""
     header = bytes.fromhex(_WAV64_HEADER_HEX)
     docs = table(spark, sf_dir, "documents")
     framed = docs.select(
@@ -4481,14 +4640,9 @@ def _ann_scratch(sf_dir: str, name: str):
     return scratch
 
 
+@register("x_ann_pq_index_search", oracle=_DUCK_PQ_TOPK)
 def x_ann_pq_index_search(spark, sf_dir):
-    """[retired from the graded registry in the r14 capacity swap —
-    slot funds ``x_audio_zero_crossings``; the persisted-codes family
-    stays graded by ``x_ann_ivfpq_index_search`` and this exact
-    composition stays value-pinned against its frozen r11 oracle in
-    ``tests/test_retired_queries.py``]
-
-    Build-once / search-many PQ index (`similarity.pq_encode` →
+    """Build-once / search-many PQ index (`similarity.pq_encode` →
     parquet → `similarity.pq_search_codes`): encode the corpus ONCE to
     a stored code table (4 small ints per 64-dim vector — the ~64×
     index-memory cut), then answer the same queries as `x_ann_pq_topk`
@@ -4572,9 +4726,7 @@ def x_cluster_balanced_sample(spark, sf_dir):
     (`functions/skew.py`): zero corpus-wide window, hot cells split
     across salt groups then reduced, bit-identical to this oracle's
     single `row_number` window form
-    (`test_properties.test_topk_per_group_equals_window_form`).
-    Pre-verified vs DuckDB at sf0.001 AND sf0.01 before registration
-    (r10's `tests/test_queued_r11.py`). Cap 40 cuts every cell at both
+    (`test_properties.test_topk_per_group_equals_window_form`). Cap 40 cuts every cell at both
     sfs (~62 members/cell at sf0.001, ~625 at sf0.01)."""
     emb = table(spark, sf_dir, "embeddings")
     centroids = emb.where(F.col("vec_id") < 8).select(
@@ -4654,10 +4806,7 @@ def x_validate_expectations(spark, sf_dir):
     regex fire; not-null/unique/referential pass — a report where no
     interesting branch executes would be a weaker row, the r10
     planted-duplication lesson). One scan grades N scan-rules; the FK
-    rule is a broadcast-sized distinct-keys left join. Registered in
-    the r15 capacity swap (retiring ``x_dedup_minhash_bucketcap``)
-    after sitting parity-verified at sf0.001 AND sf0.01 in
-    ``tests/test_queued_r15.py`` through r14."""
+    rule is a broadcast-sized distinct-keys left join."""
     from hive_scripts_spark.operators.quality_checks import (
         validate_expectations,
     )
@@ -4683,9 +4832,7 @@ def x_validate_expectations(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r16 registrations: crawl-pipeline grading rows (URL canonicalization,
-# recrawl merge, SCD2) — bodies verbatim from their parity-verified
-# queued forms in tests/test_queued_r16.py (sf0.001 AND sf0.01)
+# crawl-pipeline rows (URL canonicalization, recrawl merge, SCD2)
 # ---------------------------------------------------------------------------
 
 #: the merge query pins its projection to exactly these six columns: the
@@ -4736,10 +4883,7 @@ def x_url_canonical(spark, sf_dir):
     public suffix, non-URL passthrough) through
     ``canonical_url``/``url_host``/``url_registered_domain``; the
     oracle restates each arm's normal form in pure SQL (the
-    plan-literal grading philosophy of the codec rows). Registered in
-    the r16 capacity swap (retiring ``x_multimodal_decode_meta``)
-    after sitting parity-verified at sf0.001 AND sf0.01 in
-    ``tests/test_queued_r16.py`` through r15."""
+    plan-literal grading philosophy of the codec rows)."""
     from hive_scripts_spark.functions.urls import (
         canonical_url,
         url_host,
@@ -4792,10 +4936,7 @@ def x_merge_upsert(spark, sf_dir):
     delta, every 3rd of those tombstoned; the oracle restates
     latest-wins + tombstone semantics as UNION ALL arms. One change
     row per key, so the non-portable xxhash64 tiebreak never fires
-    (its determinism is pytest-pinned in ``test_incremental.py``).
-    Registered in the r16 capacity swap (retiring
-    ``x_multimodal_resize``) after sitting parity-verified at sf0.001
-    AND sf0.01 in ``tests/test_queued_r16.py`` through r15."""
+    (its determinism is pytest-pinned in ``test_incremental.py``)."""
     from hive_scripts_spark.operators.incremental import merge_upsert
 
     orders = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
@@ -4850,9 +4991,7 @@ def x_scd2_apply(spark, sf_dir):
     graded end-to-end: customer segments as the dimension, orders as
     the change stream with the unique-per-key ``o_orderkey`` as the
     version clock; the oracle replays close-at-first-change +
-    lead-chaining in SQL. Registered in the r16 capacity swap
-    (retiring ``x_multimodal_audio``) after sitting parity-verified at
-    sf0.001 AND sf0.01 in ``tests/test_queued_r16.py`` through r15."""
+    lead-chaining in SQL."""
     from hive_scripts_spark.operators.incremental import scd2_apply
 
     dim = table(spark, sf_dir, "customer").select(
@@ -4870,10 +5009,8 @@ def x_scd2_apply(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r17 registrations: mergeable-sketch grading rows (KMV distinct, grouped
-# KMV, count-min heavy hitters) — bodies verbatim from their
-# parity-verified queued forms in tests/test_queued_r17.py (sf0.001 AND
-# sf0.01)
+# mergeable-sketch rows (KMV distinct, grouped KMV, count-min heavy
+# hitters)
 # ---------------------------------------------------------------------------
 
 #: DuckDB twin of sketches._col_block (null-safe fixed-width pre-image
@@ -4918,10 +5055,7 @@ def x_kmv_distinct(spark, sf_dir):
     the two parity scales. The estimator constant ``(k-1) * 2^60`` is
     exact in IEEE double on both engines, the division is a single
     correctly-rounded op, and both sides round to 4 decimals (the
-    graded-jaccard float discipline). Registered in the r17 capacity
-    swap (retiring ``g_cube_order_status``) after sitting
-    parity-verified at sf0.001 AND sf0.01 in
-    ``tests/test_queued_r17.py`` through r16."""
+    graded-jaccard float discipline)."""
     from hive_scripts_spark.operators.sketches import kmv_estimate, kmv_sketch
 
     orders = table(spark, sf_dir, "orders")
@@ -4958,10 +5092,7 @@ def x_kmv_grouped(spark, sf_dir):
     two-level no-raw-shuffle plan (partial per-partition top-k, then a
     k-bounded per-group merge — raw rows never shuffle), estimated per
     group; the oracle restates the k-smallest-distinct-md5
-    construction as a row_number over distinct hashes. Registered in
-    the r17 capacity swap (retiring ``g_rollup_pricing``) after
-    sitting parity-verified at sf0.001 AND sf0.01 in
-    ``tests/test_queued_r17.py`` through r16."""
+    construction as a row_number over distinct hashes."""
     from hive_scripts_spark.operators.sketches import (
         kmv_estimate_grouped,
         kmv_sketch_grouped,
@@ -5014,9 +5145,7 @@ def x_countmin_heavy(spark, sf_dir):
     every supplier key with the min-over-rows lookup. One-sided error
     (estimate ≥ true count) and merge exactness are pytest-pinned in
     ``test_sketches.py``; the oracle rebuilds the salted grid and the
-    min-lookup in SQL. Registered in the r17 capacity swap (retiring
-    ``x_events_sessionize_chunked``) after sitting parity-verified at
-    sf0.001 AND sf0.01 in ``tests/test_queued_r17.py`` through r16."""
+    min-lookup in SQL."""
     from hive_scripts_spark.operators.sketches import (
         countmin_build,
         countmin_lookup,
@@ -5041,10 +5170,8 @@ def x_countmin_heavy(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r18 registrations: the digit-sketch quantile face (decimal-digit
-# histogram + cumulative-bucket quantile picks) and the RFC 9309 robots
-# decision fold — bodies verbatim from their parity-verified queued
-# forms in tests/test_queued_r18.py (sf0.001 AND sf0.01)
+# the digit-sketch quantile face (decimal-digit histogram + cumulative-
+# bucket quantile picks) and the RFC 9309 robots decision fold
 # ---------------------------------------------------------------------------
 
 #: DuckDB twin of sketches._digit_parts at digits=2, scale=6: the
@@ -5052,20 +5179,25 @@ def x_countmin_heavy(spark, sf_dir):
 #: exact integer/decimal/string arithmetic (NO ``log()`` — cross-engine
 #: libm log is not correctly rounded, so a log-bucketed DDSketch could
 #: flip bucket indexes between engines; the digit-string form cannot).
-_DIGIT_BUCKETS = """
+def _duck_digit_buckets(key: str | None = None) -> str:
+    """CTEs ending in ``b (sign, decade, sub)`` — the exact digit-string
+    bucket of every ``o_totalprice`` — optionally carrying a ``key``
+    column through for per-group histograms."""
+    k = f"{key}, " if key else ""
+    return f"""
     with vals as (
-      select cast(o_totalprice as decimal(38,6)) as vd
+      select {k}cast(o_totalprice as decimal(38,6)) as vd
       from orders
       where o_totalprice is not null
         and isfinite(o_totalprice) and abs(o_totalprice) < 1e31
     ), parts as (
-      select vd,
+      select {k}vd,
              regexp_replace(
                regexp_replace(cast(abs(vd) as varchar), '[.]', ''),
                '^0+', '') as stripped
       from vals
     ), b as (
-      select cast(case when vd < 0 then -1 when vd > 0 then 1
+      select {k}cast(case when vd < 0 then -1 when vd > 0 then 1
                        else 0 end as int) as sign,
              cast(length(stripped) as int) as decade,
              cast(case when length(stripped) = 0 then 0
@@ -5074,6 +5206,9 @@ _DIGIT_BUCKETS = """
       from parts
     )
 """
+
+
+_DIGIT_BUCKETS = _duck_digit_buckets()
 
 
 @register(
@@ -5094,10 +5229,7 @@ def x_digit_hist(spark, sf_dir):
     exact integer/decimal/string arithmetic so the bucket index is
     bit-identical across engines (a log-bucketed DDSketch could flip
     indexes on libm rounding). The oracle restates the same
-    regexp/rpad/substr pipeline over the same decimal(38,6) cast.
-    Registered in the r18 capacity swap (retiring ``x_dedup_exact``)
-    after sitting parity-verified at sf0.001 AND sf0.01 in
-    ``tests/test_queued_r18.py`` through r17."""
+    regexp/rpad/substr pipeline over the same decimal(38,6) cast."""
     from hive_scripts_spark.operators.sketches import digit_hist
 
     orders = table(spark, sf_dir, "orders")
@@ -5141,9 +5273,7 @@ def x_digit_quantiles(spark, sf_dir):
     (q, sign, decade, sub) picks; the float midpoint estimate is a
     convenience column dropped here (its values are pytest-pinned in
     ``test_sketches.py``, as is merge exactness — counter sum = the
-    whole-input build). Registered in the r18 capacity swap (retiring
-    ``x_doc_fingerprint``) after sitting parity-verified at sf0.001
-    AND sf0.01 in ``tests/test_queued_r18.py`` through r17."""
+    whole-input build)."""
     from hive_scripts_spark.operators.sketches import (
         digit_hist,
         digit_hist_quantiles,
@@ -5217,11 +5347,7 @@ def x_robots_decisions(spark, sf_dir):
     (exact-token group selection). Arms exercise: no-match allow,
     prefix disallow, longer-Allow override, $-anchored wildcard
     disallow, anchor miss via query string, and the no-host
-    passthrough. Registered in the r18 capacity swap (retiring
-    ``x_text_unigram_logprob``) after sitting parity-verified at
-    sf0.001 AND sf0.01 in ``tests/test_queued_r18.py`` through r17
-    (re-verified after the r17 ``robots.py`` stream-static guard
-    change)."""
+    passthrough."""
     from hive_scripts_spark.operators.robots import (
         apply_robots,
         robots_rules,
@@ -5263,3 +5389,524 @@ def x_robots_decisions(spark, sf_dir):
     # extra driver-blocking job here; the IN-PLAN conflict guard stays
     # active regardless, so a conflicting table still aborts execution.
     return apply_robots(framed, rules, url_col="url", validate_rules=False)
+
+
+# ---------------------------------------------------------------------------
+# link graph and lake layout
+# ---------------------------------------------------------------------------
+
+_PAGERANK_ITERATIONS = 5
+_PAGERANK_DAMPING_PCT = 85
+_PAGERANK_UNIT = 10**12
+
+
+def _pagerank_oracle(iterations: int = _PAGERANK_ITERATIONS) -> str:
+    """Chained-CTE PageRank: r0 = UNIT//N per node, then per iteration
+    inflow (rank//deg summed per dst), dangling mass (ranks of nodes
+    with no out-edges), and the damped update. Every step is bigint
+    multiply / integer division (Spark ``div`` ≡ DuckDB ``//`` on
+    positive operands) and integer sums are order-insensitive."""
+    unit, d = _PAGERANK_UNIT, _PAGERANK_DAMPING_PCT
+    tel = f"(({100 - d} * ({unit} // nn.n)) // 100)"
+    sql = [
+        f"""
+    with edges as (
+      select distinct cast(l_partkey as bigint) as src,
+             cast(l_suppkey + 1000000 as bigint) as dst
+      from lineitem
+      where l_partkey is not null and l_suppkey is not null
+    ), nodes as (
+      select src as node from edges union select dst as node from edges
+    ), nn as (
+      select cast(count(*) as bigint) as n from nodes
+    ), deg as (
+      select src, cast(count(*) as bigint) as deg from edges group by src
+    ), r0 as (
+      select node, ({unit} // nn.n) as rk from nodes cross join nn
+    )"""
+    ]
+    for i in range(1, iterations + 1):
+        p = i - 1
+        sql.append(
+            f""", inf{i} as (
+      select e.dst as node, sum(r.rk // d.deg) as inflow
+      from edges e
+      join r{p} r on e.src = r.node
+      join deg d on e.src = d.src
+      group by e.dst
+    ), dang{i} as (
+      select coalesce(sum(r.rk), 0) as dang
+      from r{p} r left join deg d on r.node = d.src
+      where d.src is null
+    ), r{i} as (
+      select nd.node,
+             {tel}
+             + (({d} * (coalesce(i.inflow, 0)
+                 + (dg.dang // nn.n))) // 100) as rk
+      from nodes nd
+      left join inf{i} i on nd.node = i.node
+      cross join nn cross join dang{i} dg
+    )"""
+        )
+    # sum() is HUGEINT in DuckDB: cast back to bigint for typed parity
+    sql.append(
+        f"""
+    select node, cast(rk as bigint) as rank_units from r{iterations}"""
+    )
+    return "".join(sql)
+
+
+@register("x_pagerank_portable", oracle=_pagerank_oracle())
+def x_pagerank_portable(spark, sf_dir):
+    """Fixed-point integer PageRank (``operators/graph.py``) over the
+    part→supplier edge set from lineitem. Supplier ids are offset by
+    10^6 so the two key spaces cannot collide: every supplier is then a
+    true sink, and the dangling-mass arm runs in every iteration."""
+    from hive_scripts_spark.operators.graph import pagerank_portable
+
+    li = table(spark, sf_dir, "lineitem")
+    edges = li.select(
+        F.col("l_partkey").alias("src"),
+        (F.col("l_suppkey") + 1000000).alias("dst"),
+    )
+    ranks = pagerank_portable(
+        edges,
+        iterations=_PAGERANK_ITERATIONS,
+        damping_pct=_PAGERANK_DAMPING_PCT,
+    )
+    return ranks.select("node", F.col("rank").alias("rank_units"))
+
+
+def _zorder_oracle() -> str:
+    from hive_scripts_spark.functions.zorder import morton_key_sql
+
+    expr = morton_key_sql("(l_orderkey % 1024)", "(l_partkey % 1024)", 10)
+    return f"select l_orderkey, l_partkey, {expr} as zkey from lineitem"
+
+
+@register("x_zorder_key", oracle=_zorder_oracle())
+def x_zorder_key(spark, sf_dir):
+    """The Morton clustering key over the (order, part) grid — Spark
+    and SQL twins generated from ``functions/zorder.py`` so they cannot
+    drift."""
+    from hive_scripts_spark.functions.zorder import morton_key
+
+    li = table(spark, sf_dir, "lineitem")
+    return li.select(
+        "l_orderkey",
+        "l_partkey",
+        morton_key(
+            F.col("l_orderkey") % 1024, F.col("l_partkey") % 1024, bits=10
+        ).alias("zkey"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# sketches, leakage and quotas
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "x_digit_quantiles_grouped",
+    oracle=_duck_digit_buckets("o_orderpriority")
+    + """
+    , h as (
+      select o_orderpriority, sign, decade, sub,
+             cast(count(*) as bigint) as cnt
+      from b group by 1, 2, 3, 4
+    ), r as (
+      select *, sign * (decade * 1000 + sub) as ord from h
+    ), c as (
+      select *,
+             sum(cnt) over (partition by o_orderpriority order by ord
+               rows between unbounded preceding and current row) as cum,
+             sum(cnt) over (partition by o_orderpriority) as total
+      from r
+    ), q as (
+      select unnest(cast([0.5, 0.95] as double[])) as q
+    ), e as (
+      select q.q, c.o_orderpriority, c.sign, c.decade, c.sub, c.ord
+      from q, c where c.cum >= ceil(q.q * c.total)
+    )
+    select o_orderpriority, q, sign, decade, sub from e
+    qualify row_number() over (partition by o_orderpriority, q
+                               order by ord) = 1
+""",
+)
+def x_digit_quantiles_grouped(spark, sf_dir):
+    """Per-priority p50/p95 picks through ``digit_hist_grouped`` — per-
+    group percentiles the way a per-language length monitor runs them;
+    the cumulative windows partition by group."""
+    from hive_scripts_spark.operators.sketches import (
+        digit_hist_grouped,
+        digit_hist_quantiles_grouped,
+    )
+
+    orders = table(spark, sf_dir, "orders")
+    sk = digit_hist_grouped(
+        orders, ["o_orderpriority"], "o_totalprice", digits=2
+    )
+    return digit_hist_quantiles_grouped(
+        sk, ["o_orderpriority"], [0.5, 0.95], digits=2
+    ).select("o_orderpriority", "q", "sign", "decade", "sub")
+
+
+@register(
+    "x_split_leakage",
+    oracle=_DUCK_MINHASH_VERIFIED
+    + """
+    , assigned as (
+      select doc_id,
+             case when b < 50 then 'train'
+                  when b < 75 then 'val'
+                  else 'test' end as split
+      from (
+        select doc_id,
+               cast(('0x' || substr(
+                   md5('split' || chr(1) || cast(doc_id as varchar)),
+                   1, 15)) as bigint) % 100 as b
+        from documents
+      )
+    )
+    select v.a_id, v.b_id, v.jaccard,
+           sa.split as split_a, sb.split as split_b
+    from mh_verified v
+    join assigned sa on v.a_id = sa.doc_id
+    join assigned sb on v.b_id = sb.doc_id
+    where sa.split != sb.split
+""",
+)
+def x_split_leakage(spark, sf_dir):
+    """Near-duplicate pairs that straddle the train/val/test boundary
+    (``curation.split_leakage_pairs``) over the md5 MinHash-LSH verified
+    pairs (the ``x_dedup_minhash_portable`` oracle CTEs). Split shares
+    are 50/25/25 so the boundary-crossing result is non-empty at both
+    test scales."""
+    from hive_scripts_spark.operators.curation import split_leakage_pairs
+
+    docs = table(spark, sf_dir, "documents")
+    pairs = D.minhash_lsh_pairs_portable(docs, threshold=0.2)
+    leaks = split_leakage_pairs(
+        docs, pairs, key_cols=["doc_id"], val_pct=25, test_pct=25
+    )
+    return leaks.select("a_id", "b_id", "jaccard", "split_a", "split_b")
+
+
+@register(
+    "x_kmv_merge_groups",
+    # restates the two-level construction (per-group survivors → global
+    # k smallest) rather than the KMV exactness theorem, so the merge
+    # path itself is what is checked
+    oracle="""
+    with h as (
+      select distinct o_orderpriority,
+             cast(('0x' || substr(md5(
+               case when o_custkey is null then '<null>'
+                    else md5(cast(o_custkey as varchar)) end
+             ), 1, 15)) as bigint) as kmv_hash
+      from orders
+    ), ranked as (
+      select o_orderpriority, kmv_hash,
+             row_number() over (partition by o_orderpriority
+                                order by kmv_hash) as rn
+      from h
+    ), survivors as (
+      select kmv_hash from ranked where rn <= 128
+    ), topk as (
+      select distinct kmv_hash from survivors
+      order by kmv_hash limit 128
+    )
+    select cast(count(*) as bigint) as n_hashes,
+           max(kmv_hash) as kth_hash,
+           round(case when count(*) < 128 then cast(count(*) as double)
+                 else (cast(127 as double)
+                       * cast(1152921504606846976 as double))
+                      / cast(max(kmv_hash) as double) end, 4) as est_distinct
+    from topk
+""",
+)
+def x_kmv_merge_groups(spark, sf_dir):
+    """Per-priority KMV sketches merged into one global estimate — the
+    persist-per-partition / answer-any-range pattern."""
+    from hive_scripts_spark.operators.sketches import (
+        kmv_estimate,
+        kmv_merge,
+        kmv_sketch_grouped,
+    )
+
+    orders = table(spark, sf_dir, "orders")
+    grouped = kmv_sketch_grouped(
+        orders, ["o_orderpriority"], ["o_custkey"], k=128
+    )
+    merged = kmv_merge([grouped.select("kmv_hash")], k=128)
+    return kmv_estimate(merged, k=128)
+
+
+@register(
+    "x_domain_cap",
+    # the salted two-level top-k is bit-transparent, so the oracle is the
+    # plain row_number over (md5(id), id) partitioned by the eTLD+1 the
+    # arms construct: www.big.example collapses to big.example,
+    # a./b.shared.example share one quota, tiny.example (4 docs) passes
+    # under-cap, and no-host URLs cap inside the '' bucket
+    oracle="""
+    with armed as (
+      select doc_id, cast(doc_id % 10 as int) as arm,
+             cast(doc_id as varchar) as i
+      from documents
+    ), docs as (
+      select doc_id,
+             case
+               when arm = 9 and doc_id < 40
+                 then 'https://tiny.example/p' || i
+               when arm = 9 then 'doc ' || i || ' plain'
+               when arm = 7 then 'https://a.shared.example/p' || i
+               when arm = 8 then 'https://b.shared.example/p' || i
+               else 'https://www.big.example/p' || i
+             end as url,
+             case
+               when arm = 9 and doc_id < 40 then 'tiny.example'
+               when arm = 9 then ''
+               when arm in (7, 8) then 'shared.example'
+               else 'big.example'
+             end as domain
+      from armed
+    ), ranked as (
+      select doc_id, url,
+             cast(row_number() over (
+               partition by domain
+               order by md5(cast(doc_id as varchar)), doc_id) as int)
+               as pick_order
+      from docs
+    )
+    select doc_id, url, pick_order from ranked where pick_order <= 25
+""",
+)
+def x_domain_cap(spark, sf_dir):
+    """A skewed four-domain URL mix (70 % one domain — the hot group the
+    salted top-k exists for) through ``curation.cap_per_domain``, cap 25,
+    with ``keep_rank`` for the ``pick_order`` audit column."""
+    from hive_scripts_spark.operators.curation import cap_per_domain
+
+    docs = table(spark, sf_dir, "documents")
+    i = F.col("doc_id").cast("string")
+    arm = F.pmod("doc_id", F.lit(10))
+    url = (
+        F.when(
+            (arm == 9) & (F.col("doc_id") < 40),
+            F.concat(F.lit("https://tiny.example/p"), i),
+        )
+        .when(arm == 9, F.concat(F.lit("doc "), i, F.lit(" plain")))
+        .when(arm == 7, F.concat(F.lit("https://a.shared.example/p"), i))
+        .when(arm == 8, F.concat(F.lit("https://b.shared.example/p"), i))
+        .otherwise(F.concat(F.lit("https://www.big.example/p"), i))
+    )
+    framed = docs.select("doc_id", url.alias("url"))
+    return cap_per_domain(framed, cap=25, salts=8, keep_rank=True)
+
+
+@register(
+    "x_clean_invisible",
+    # both regex classes restated in RE2 syntax, so the value hash pins
+    # the class bodies byte-for-byte across engines
+    oracle=r"""
+    with armed as (
+      select doc_id, cast(doc_id % 5 as int) as arm,
+             cast(doc_id as varchar) as i
+      from documents
+    ), planted as (
+      select doc_id,
+             case arm
+               when 0 then 'plain ' || i
+               when 1 then 'zw' || chr(8203) || 'sp ' || chr(8205)
+                        || chr(65279) || i
+               when 2 then 'ctl' || chr(1) || chr(127) || chr(154)
+                        || ' ' || i
+               when 3 then 'line1' || chr(13) || chr(10) || 'line2'
+                        || chr(11) || 'line3 ' || i
+               else 'soft' || chr(173) || 'hyphen rlm' || chr(8207)
+                        || ' ' || i
+             end as text
+      from armed
+    )
+    select doc_id,
+           regexp_replace(
+             regexp_replace(text, '\r\n|[\x{0b}\x{0c}\x{0d}]',
+                            chr(10), 'g'),
+             '[\x{00}-\x{08}\x{0e}-\x{1f}\x{7f}\x{80}-\x{9f}\x{ad}\x{200b}\x{200e}-\x{200f}\x{202a}-\x{202e}\x{2060}\x{2066}-\x{2069}\x{feff}]',
+             '', 'g') as text_clean
+    from planted
+""",
+)
+def x_clean_invisible(spark, sf_dir):
+    """``encoding.strip_invisible_col`` over five planted arms: clean
+    passthrough, ZWSP/BOM strip with a kept ZWJ (the default-keep joiner
+    contract), C0/DEL/C1 strip, CRLF/VT converted to newlines (never
+    deleted — deleting a bare CR fuses words), and soft-hyphen/RLM
+    strip."""
+    from hive_scripts_spark.operators.encoding import strip_invisible_col
+
+    docs = table(spark, sf_dir, "documents")
+    i = F.col("doc_id").cast("string")
+    arm = F.pmod("doc_id", F.lit(5))
+    text = (
+        F.when(arm == 0, F.concat(F.lit("plain "), i))
+        .when(arm == 1, F.concat(F.lit("zw\u200bsp \u200d\ufeff"), i))
+        .when(arm == 2, F.concat(F.lit("ctl\x01\x7f\x9a "), i))
+        .when(arm == 3, F.concat(F.lit("line1\r\nline2\x0bline3 "), i))
+        .otherwise(F.concat(F.lit("soft\u00adhyphen rlm\u200f "), i))
+    )
+    planted = docs.select("doc_id", text.alias("text"))
+    return planted.select(
+        "doc_id", strip_invisible_col("text").alias("text_clean")
+    )
+
+
+# ---------------------------------------------------------------------------
+# planted twins: value-checked rows for the engine-specific hash paths.
+# Identical copies have identical signatures under ANY hash function, so
+# they are guaranteed candidates; the exact verify (engine-portable) kills
+# everything below threshold, and the output is a closed-form twin list.
+# tests/test_similarity.py and tests/test_dedup.py pin the data margins
+# these closed forms lean on.
+# ---------------------------------------------------------------------------
+
+#: dimension 0 must carry > 2% of the squared norm, so a dim-0 flip
+#: copy has cosine < 0.96 with its original — below the 0.99 threshold
+PLANTED_ENERGY_CUT = 0.02
+#: above the max natural near-dup Jaccard of the test corpora (0.9894)
+PLANTED_MH_THRESHOLD = 0.995
+
+
+def planted_embedding_copies(spark, sf_dir):
+    """Three copies per kept base vector: ids 3v and 3v+1 verbatim (an
+    identical twin, cosine 1.0), 3v+2 with dimension 0 sign-flipped."""
+    emb = table(spark, sf_dir, "embeddings")
+    staged = emb.select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
+    ).select(
+        "vec_id",
+        "vec",
+        F.aggregate("vec", F.lit(0.0), lambda acc, x: acc + x * x).alias("n2"),
+        F.element_at("vec", 1).alias("v0"),
+    )
+    kept = staged.where(
+        (F.col("n2") > 0)
+        & (F.col("v0") * F.col("v0") > PLANTED_ENERGY_CUT * F.col("n2"))
+    )
+    flipped = F.transform("vec", lambda x, i: F.when(i == 0, -x).otherwise(x))
+    return kept.select(
+        "vec_id",
+        F.posexplode(F.array(F.col("vec"), F.col("vec"), flipped)).alias(
+            "c", "embedding"
+        ),
+    ).select((F.col("vec_id") * 3 + F.col("c")).alias("vec_id"), "embedding")
+
+
+@register(
+    "x_embed_near_dup_planted",
+    oracle=f"""
+    with staged as (
+      select vec_id, cast(embedding as double[]) as vec
+      from embeddings
+    ), m as (
+      select vec_id,
+             list_dot_product(vec, vec) as n2,
+             vec[1] as v0
+      from staged
+    )
+    select vec_id * 3 as a_id, vec_id * 3 + 1 as b_id,
+           cast(1.0 as double) as cosine_sim
+    from m
+    where n2 > 0 and v0 * v0 > {PLANTED_ENERGY_CUT} * n2
+""",
+)
+def x_embed_near_dup_planted(spark, sf_dir):
+    """The production hyperplane-LSH + exact-cosine near-dup path at
+    threshold 0.99 over :func:`planted_embedding_copies`: the output is
+    exactly the kept-base twin pairs at cosine 1.0 (recall through real
+    banding, precision through real verify — the flip pairs reach the
+    verify join and die there)."""
+    return S.embedding_near_dup_pairs(
+        planted_embedding_copies(spark, sf_dir), threshold=0.99, use_lsh=True
+    )
+
+
+def planted_doc_copies(spark, sf_dir, n: int):
+    """``n`` identical copies of every document, ids ``n*doc_id + c``."""
+    docs = table(spark, sf_dir, "documents")
+    ids = [F.col("doc_id") * n + c for c in range(n)]
+    return docs.select(F.explode(F.array(*ids)).alias("doc_id"), "text")
+
+
+@register(
+    "x_dedup_minhash_planted",
+    oracle=f"""
+    with toks as (
+      select doc_id, string_split({_NORM}, ' ') as ws from documents
+    )
+    select doc_id * 2 as a_id, doc_id * 2 + 1 as b_id,
+           cast(1.0 as double) as jaccard
+    from toks where len(ws) >= 3
+""",
+)
+def x_dedup_minhash_planted(spark, sf_dir):
+    """Two identical copies per doc through the production xxhash64
+    banded MinHash-LSH + exact-Jaccard verify chain; the output is
+    exactly the twin pairs."""
+    return D.minhash_lsh_pairs(
+        planted_doc_copies(spark, sf_dir, 2),
+        threshold=PLANTED_MH_THRESHOLD,
+        parallelism=spark.sparkContext.defaultParallelism,
+    )
+
+
+@register(
+    "x_doc_rolling_hash_planted",
+    oracle="""
+    select doc_id * 2 as a_id, doc_id * 2 + 1 as b_id,
+           true as rolling_match
+    from documents
+""",
+)
+def x_doc_rolling_hash_planted(spark, sf_dir):
+    """``textstats.doc_fingerprint``'s xxhash64 rolling hash checked by
+    value: twin copies joined on the portable ``content_md5``, and the
+    graded value is whether the twins' rolling hashes agree — so a hash
+    that depends on anything besides content (partitioning, row order,
+    id) flips the boolean."""
+    fp = X.doc_fingerprint(planted_doc_copies(spark, sf_dir, 2))
+    a = fp.toDF("a_id", "content_md5", "a_rolling")
+    b = fp.toDF("b_id", "content_md5", "b_rolling")
+    return (
+        a.join(b, "content_md5")
+        .where(F.col("a_id") < F.col("b_id"))
+        .select(
+            "a_id",
+            "b_id",
+            (F.col("a_rolling") == F.col("b_rolling")).alias("rolling_match"),
+        )
+    )
+
+
+@register(
+    "x_dedup_components_planted",
+    oracle=f"""
+    select doc_id * 3 + c as node, doc_id * 3 as component
+    from documents, (select unnest([0, 1, 2]) as c)
+    where len(string_split({_NORM}, ' ')) >= 3
+""",
+)
+def x_dedup_components_planted(spark, sf_dir):
+    """``connected_components`` over the xxhash64 MinHash-LSH edges of
+    three identical copies per doc: the components are exactly
+    ``{3k, 3k+1, 3k+2}`` labeled ``3k`` per eligible doc."""
+    from hive_scripts_spark.operators.cluster import connected_components
+
+    pairs = D.minhash_lsh_pairs(
+        planted_doc_copies(spark, sf_dir, 3),
+        threshold=PLANTED_MH_THRESHOLD,
+        parallelism=spark.sparkContext.defaultParallelism,
+    )
+    return connected_components(pairs)

@@ -30,7 +30,8 @@ from hive_scripts_spark.plans.oracle_helpers import (
     duck_fingerprint,
     duck_hash_bucket,
 )
-from hive_scripts_spark.plans.registry import register, table
+from hive_scripts_spark.plans.registry import register
+from hive_scripts_spark.sources.readers import table
 
 # ---------------------------------------------------------------------------
 # S2/P1 — delimited-text scan + positional projection (compare_tables.sh)
@@ -252,15 +253,15 @@ def a4_deterministic_sample(spark, sf_dir):
     )
 
 
+@register(
+    "a4_limit_sample",
+    oracle="""
+    select o_orderkey, o_orderstatus, o_totalprice
+    from orders order by o_orderkey limit 10
+    """,
+)
 def a4_limit_sample(spark, sf_dir):
-    """Deterministic head-N sample (`sort | head` semantics).
-
-    Retired from the graded registry in r9 (one-in-one-out capacity
-    swap, COVERAGE.md "Registry capacity"): the A4 sampling family
-    stays graded via `a4_deterministic_sample` + `a4_stratified_sample`
-    and this limit form keeps its value check in
-    `tests/test_retired_queries.py` against the same DuckDB oracle the
-    driver used through r8."""
+    """Deterministic head-N sample (`sort | head` semantics)."""
     orders = table(spark, sf_dir, "orders")
     return (
         orders.orderBy("o_orderkey")
@@ -274,15 +275,10 @@ def a4_limit_sample(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+@register("p2_project_all", oracle="select * from nation")
 def p2_project_all(spark, sf_dir):
     """P2 project-all (SELECT * — verizon_automation_script.sh export
-    projection).
-
-    Retired from the graded registry in r9 (one-in-one-out capacity
-    swap): project-all is implicitly re-proven by every full-row graded
-    query (e.g. `x_pii_redact` grades an entire text column), and this
-    exact form keeps its value check in
-    `tests/test_retired_queries.py`."""
+    projection)."""
     return table(spark, sf_dir, "nation").select("*")
 
 
@@ -512,12 +508,15 @@ def j_anti_customers_no_pending(spark, sf_dir):
     ).select("c_custkey", "c_name")
 
 
+@register(
+    "j_semi_nations_with_suppliers",
+    oracle="""
+    select n_nationkey, n_name from nation n
+    where exists (select 1 from supplier s where s.s_nationkey = n.n_nationkey)
+    """,
+)
 def j_semi_nations_with_suppliers(spark, sf_dir):
-    """[retired from the graded registry in the r15 capacity swap —
-    slot funds ``x_text_bigram_logprob``; a minimal left-semi
-    demonstration whose family stays graded by the reference-derived
-    ``j1_reconcile_matched`` row, value-pinned against its frozen r12
-    oracle in ``tests/test_retired_queries.py``]"""
+    """A minimal left-semi join: nations with at least one supplier."""
     nation = table(spark, sf_dir, "nation")
     supp = table(spark, sf_dir, "supplier")
     return nation.join(
@@ -525,14 +524,19 @@ def j_semi_nations_with_suppliers(spark, sf_dir):
     ).select("n_nationkey", "n_name")
 
 
+@register(
+    "a4_stratified_sample",
+    oracle=f"""
+    select c_mktsegment, count(*) as n_sampled,
+           count(distinct c_custkey) as n_customers
+    from customer
+    where {duck_hash_bucket("cast(c_custkey as varchar)")} <
+          case c_mktsegment when 'BUILDING' then 200 else 100 end
+    group by c_mktsegment
+    """,
+)
 def a4_stratified_sample(spark, sf_dir):
-    """[retired from the graded registry in the r14 capacity swap —
-    slot funds ``x_events_sessionize_chunked``; the A4 sampling family
-    stays graded by ``a4_deterministic_sample`` and this exact
-    per-stratum composition stays value-pinned against its frozen r11
-    oracle in ``tests/test_retired_queries.py``]
-
-    Deterministic stratified sampling: per-stratum fractions (the
+    """Deterministic stratified sampling: per-stratum fractions (the
     ``df.sampleBy`` intent, made engine-reproducible).
 
     Same hash-mod machinery as ``deterministic_sample`` but the bucket

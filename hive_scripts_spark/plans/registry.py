@@ -2,9 +2,9 @@
 
 Every operator claimed in SURVEY §2 registers here as a named query:
 a PySpark callable ``(spark, sf_dir) -> DataFrame`` plus (where
-SQL-expressible) an equivalent ANSI-SQL oracle string for DuckDB. The
-driver compares the two at sf0.01 by row count + schema +
-order-insensitive value hash, so:
+SQL-expressible) an equivalent ANSI-SQL oracle string for DuckDB.
+``tests/test_parity.py`` and ``tools/parity.py`` compare the two by row
+count + column names + order-insensitive value hash, so:
 
 * every computed column is aliased identically on both sides;
 * float aggregates go through **exact decimal accumulation** then a cast
@@ -13,7 +13,8 @@ order-insensitive value hash, so:
   (:mod:`hive_scripts_spark.functions.canonical`).
 
 Import side effect: importing this module imports the query modules,
-which populate :data:`QUERIES` / :data:`ORACLES` via :func:`register`.
+which populate :data:`QUERIES` / :data:`ORACLES` via :func:`register`
+in registration order.
 """
 
 from __future__ import annotations
@@ -46,74 +47,7 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-#: time-typed columns per table: the data layer has shipped these as
-#: TIMESTAMP(NANOS)-as-long, micros-NTZ, and micros-UTC parquet at
-#: various times (events.ts changed representation mid-round-4), so every
-#: one is canonicalized on load instead of assuming a layout.
-_TS_COLUMNS: dict[str, list[str]] = {
-    "events": ["ts"],
-    "orders": ["o_orderdate"],
-    "lineitem": ["l_shipdate"],
-}
-
-
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table (TESTDATA.md layout).
-
-    Columns listed in :data:`_TS_COLUMNS` are canonicalized to a
-    UTC-instant ``TIMESTAMP`` by the dtype-driven probe in
-    :mod:`hive_scripts_spark.sources.events`, whatever parquet
-    representation the data layer picked.
-    """
-    ts_cols = _TS_COLUMNS.get(name)
-    if not ts_cols:
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    from hive_scripts_spark.sources.events import normalize_event_ts, pin_utc
-
-    pin_utc(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for c in ts_cols:
-        df = normalize_event_ts(df, c)
-    return df
-
-
-# The external correctness gate grades only the FIRST 50 registry
-# entries in insertion order, so registration order IS the grading
-# window. Through r7 the window was a hand-maintained FRONT_ORDER list
-# here (rotation history r1-r7 lives in git at this file's r7 blob);
-# hand-editing is how 34 oracled queries drifted two-plus rounds past
-# their last green row. Since r8 the window is GENERATED from the
-# committed CORRECTNESS_r*.json artifacts by
-# :mod:`hive_scripts_spark.plans.rotation`:
-# never-graded first (new ops get first rows immediately), then stale
-# (oldest green first), then freshness re-grades to fill 50 slots.
-# The staleness guard in tests/test_entry.py recomputes the same
-# history independently, so it is green by construction.
-FRONT_ORDER: list[str] = []
-
-
-def _load_all() -> None:
-    # populate the registry (import side effects)
-    from hive_scripts_spark.plans import analytics_queries  # noqa: F401
-    from hive_scripts_spark.plans import extension_queries  # noqa: F401
-    from hive_scripts_spark.plans import reference_queries  # noqa: F401
-
-    from hive_scripts_spark.plans import rotation
-
-    last_green, latest = rotation.load_green_history(rotation.repo_root())
-    # only oracled queries compete for window slots: the 6 permanent
-    # no-oracle rows (xxhash64 families + HLL) each have a value-graded
-    # portable twin, so a rows-only slot would waste grading capacity.
-    FRONT_ORDER[:] = rotation.compute_front_order(
-        [n for n in QUERIES if n in ORACLES], last_green, latest,
-        strict=False,  # overflow fails loudly in tests/tools, not here
-    )
-    front = set(FRONT_ORDER)
-    ordered = FRONT_ORDER + [n for n in QUERIES if n not in front]
-    for d in (QUERIES, ORACLES):
-        reordered = {n: d[n] for n in ordered if n in d}
-        d.clear()
-        d.update(reordered)
-
-
-_load_all()
+# populate the registry (import side effects)
+from hive_scripts_spark.plans import analytics_queries  # noqa: E402,F401
+from hive_scripts_spark.plans import extension_queries  # noqa: E402,F401
+from hive_scripts_spark.plans import reference_queries  # noqa: E402,F401

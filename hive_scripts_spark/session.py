@@ -13,11 +13,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partitioning: sized for local[32] test runs; on a real cluster the
-# env knobs (or spark-submit conf) override these. AQE coalesces down at
-# runtime, so err on the high side for the 100 TB posture.
-_DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _host_cpus() -> str:
+    """CPUs this process may run on (its affinity mask, as ``nproc`` counts)."""
+    try:
+        return str(len(os.sched_getaffinity(0)))
+    except AttributeError:  # no sched_getaffinity on this platform
+        return str(os.cpu_count() or 1)
+
+
+# Local task slots and shuffle partitions default to the CPUs this process
+# may use; on a real cluster the env knobs (or spark-submit conf) override.
+_HOST_CPUS = _host_cpus()
+_DEFAULT_SHUFFLE_PARTITIONS = os.environ.get(
+    "SPARK_GRAFT_SHUFFLE_PARTITIONS", _HOST_CPUS
+)
+_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", _HOST_CPUS)
 
 
 def _default_driver_mem() -> str:
@@ -64,8 +75,8 @@ def get_spark(app_name: str = "hive_scripts_spark", master: str | None = None) -
     * **single-threaded BLAS in Python workers**: Spark already
       parallelizes the numpy paths (`ivf_assign`, `semantic_dedup`'s
       cell matmuls, PQ LUTs) across one worker per input split; a
-      multi-threaded OpenBLAS/MKL inside EACH of 32 workers
-      oversubscribes the box ~32× and thrashes (measured: the 1M×2048
+      multi-threaded OpenBLAS/MKL inside EACH worker
+      oversubscribes the box N× and thrashes (measured: the 1M×2048
       coarse assignment warm 13.5 → 8.8 s with the pin). ``setdefault``
       so an explicit user env always wins; must be set before the JVM
       launches (local-mode python workers inherit this process's env).

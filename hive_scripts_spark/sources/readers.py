@@ -230,6 +230,37 @@ def load_tables(spark: SparkSession, db_path: str, names=TESTDATA_TABLES):
     return {name: load_table(spark, db_path, name) for name in names}
 
 
+#: time-typed columns per table: the data layer has shipped these as
+#: TIMESTAMP(NANOS)-as-long, micros-NTZ, and micros-UTC parquet at
+#: various times, so every one is canonicalized on load instead of
+#: assuming a layout.
+_TS_COLUMNS: dict[str, list[str]] = {
+    "events": ["ts"],
+    "orders": ["o_orderdate"],
+    "lineitem": ["l_shipdate"],
+}
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one testdata table (TESTDATA.md layout).
+
+    Columns listed in :data:`_TS_COLUMNS` are canonicalized to a
+    UTC-instant ``TIMESTAMP`` by the dtype-driven probe in
+    :mod:`hive_scripts_spark.sources.events`, whatever parquet
+    representation the data layer picked.
+    """
+    ts_cols = _TS_COLUMNS.get(name)
+    if not ts_cols:
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    from hive_scripts_spark.sources.events import normalize_event_ts, pin_utc
+
+    pin_utc(spark)
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    for c in ts_cols:
+        df = normalize_event_ts(df, c)
+    return df
+
+
 def analyze_table(
     spark: SparkSession, db: str, name: str, columns: bool = True
 ) -> tuple[int | None, int | None]:

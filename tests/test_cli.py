@@ -1052,3 +1052,38 @@ def test_bpe_apply_rejects_output_inside_db(tmp_path):
              "--model", str(model),
              "--output", "/root/testdata/sf0.001/documents.parquet"]
         )
+
+
+def test_export_does_not_load_the_query_registry(tmp_path):
+    """The product CLI needs only the table reader, not the query
+    catalogue: importing the registry loads every query module."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import sys\n"
+        "from hive_scripts_spark.__main__ import main\n"
+        "rc = main(['export', '--db', '/root/testdata/sf0.001', '--output', "
+        f"{str(tmp_path / 'export')!r}, '--shards', '2', '--budget', '128'])\n"
+        "assert rc == 0, rc\n"
+        "print('registry' if 'hive_scripts_spark.plans.registry' in sys.modules "
+        "else 'no-registry')\n"
+    )
+    env = {
+        **os.environ,
+        "PYTHONPATH": str(Path(__file__).resolve().parents[1]),
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.splitlines()[-1] == "no-registry"

@@ -942,3 +942,94 @@ def test_minhash_index_interoperates_with_inline_chain(spark, tmp_path):
         ).collect()
     }
     assert inline == derived
+
+
+#: engine-faithful shingle sets (word 3-grams over the normalized token
+#: stream, distinct, sorted for set comparison)
+_MH_SETS = r"""
+    with toks as (
+      select doc_id, string_split(trim(regexp_replace(regexp_replace(
+               text, chr(13), '', 'g'), '\s+', ' ', 'g')), ' ') as ws
+      from documents
+    ), sets as (
+      select doc_id, list_sort(list_distinct([
+               ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
+               for i in range(1, greatest(len(ws) - 1, 1))
+             ])) as sh
+      from toks where len(ws) >= 3
+    )
+"""
+
+
+@pytest.mark.parametrize(
+    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+)
+def test_minhash_planted_margins(sf_dir):
+    """The data properties x_dedup_minhash_planted and
+    x_dedup_components_planted lean on, with margin: no two distinct
+    docs share an identical shingle set (else their cross-copy pairs
+    would join the output), and the max natural pair Jaccard stays
+    below 0.991 (threshold 0.995 minus margin), so natural near-dups
+    always die at exact verify."""
+    from hive_scripts_spark.plans.oracle_helpers import duck_views
+
+    con = duck_views(sf_dir)
+    try:
+        identical_groups = con.sql(
+            f"""{_MH_SETS}
+            select count(*) from (
+              select sh from sets group by sh having count(*) > 1)
+            """
+        ).fetchone()[0]
+        assert identical_groups == 0
+        max_natural = con.sql(
+            f"""{_MH_SETS}
+            select max(len(list_intersect(a.sh, b.sh)) * 1.0
+                       / len(list_distinct(list_concat(a.sh, b.sh))))
+            from sets a join sets b
+              on a.doc_id < b.doc_id and a.sh <> b.sh
+            """
+        ).fetchone()[0]
+        assert max_natural < 0.991, f"max natural jaccard: {max_natural}"
+    finally:
+        con.close()
+
+
+def test_minhash_planted_arms_fire(spark):
+    """x_dedup_minhash_planted at sf0.01: one twin pair per eligible doc
+    at exactly 1.0, and the verify-kill arm really runs — a loose 0.5
+    threshold on the same corpus surfaces strictly more pairs."""
+    from hive_scripts_spark.plans.extension_queries import planted_doc_copies
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    sf_dir = "/root/testdata/sf0.01"
+    rows = QUERIES["x_dedup_minhash_planted"](spark, sf_dir).collect()
+    got = {(r["a_id"], r["b_id"]): r["jaccard"] for r in rows}
+    assert len(got) > 0
+    assert all(v == 1.0 for v in got.values())
+    assert all(b == a + 1 and a % 2 == 0 for a, b in got)
+    loose = D.minhash_lsh_pairs(
+        planted_doc_copies(spark, sf_dir, 2),
+        threshold=0.5,
+        parallelism=spark.sparkContext.defaultParallelism,
+    )
+    n_loose = loose.count()
+    assert n_loose > len(got), (n_loose, len(got))
+
+
+def test_components_planted_arms_fire(spark):
+    """x_dedup_components_planted at sf0.01: every eligible doc yields
+    exactly one 3-member component labeled by its lowest copy id, i.e.
+    the propagation merged the three pairwise twin edges."""
+    from collections import Counter
+
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    rows = QUERIES["x_dedup_components_planted"](
+        spark, "/root/testdata/sf0.01"
+    ).collect()
+    assert len(rows) > 0
+    by_comp = Counter(r["component"] for r in rows)
+    assert all(c == 3 for c in by_comp.values())
+    assert all(r["component"] % 3 == 0 for r in rows)
+    assert all(r["node"] - r["component"] in (0, 1, 2) for r in rows)

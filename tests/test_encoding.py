@@ -424,3 +424,20 @@ def test_repair_safe_honors_strip_joiners(spark):
         ).alias("t")
     ).collect()[0]["t"]
     assert got == "ab\u0080"  # joiner + ZWSP gone, C1 byte kept
+
+
+def test_planted_arms_fire(spark):
+    """x_clean_invisible at sf0.01: the ZWJ survives, the invisibles
+    vanish, and the CR/VT arms convert to newlines instead of fusing
+    words."""
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    rows = {
+        r["doc_id"]: r["text_clean"]
+        for r in QUERIES["x_clean_invisible"](spark, "/root/testdata/sf0.01").collect()
+    }
+    assert rows[0] == "plain 0"
+    assert rows[1] == "zwsp \u200d1"  # ZWSP/BOM gone, ZWJ kept
+    assert rows[2] == "ctl 2"
+    assert rows[3] == "line1\nline2\nline3 3"
+    assert rows[4] == "softhyphen rlm 4"

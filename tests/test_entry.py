@@ -1,5 +1,9 @@
 """Driver-contract smoke tests: entry() runs, queries()/oracle_sql() keys
-line up, every query produces a stable schema at sf0.001."""
+line up, and the query order is plain registration order
+(tests/test_parity.py runs every query)."""
+
+import ast
+from pathlib import Path
 
 import __spark_entry__ as entry_mod
 
@@ -28,85 +32,20 @@ def test_oracle_keys_subset_of_queries():
     assert all(k.startswith(("x_", "g_")) for k in unoracled), unoracled
 
 
-def test_front_order_window_invariants():
-    """The driver grades the FIRST 50 registry entries; a malformed
-    rotation list would silently shrink or corrupt the graded window."""
-    from hive_scripts_spark.plans.registry import FRONT_ORDER, ORACLES, QUERIES
-
-    assert len(FRONT_ORDER) == 50
-    assert len(FRONT_ORDER) == len(set(FRONT_ORDER)), "duplicate window entries"
-    missing = [n for n in FRONT_ORDER if n not in QUERIES]
-    assert not missing, f"window names not registered: {missing}"
-    assert list(QUERIES)[:50] == FRONT_ORDER, "window not at registry front"
-    # every windowed query is oracled unless documented rows-only
-    rows_only = {n for n in FRONT_ORDER if n not in ORACLES}
-    assert not rows_only, f"unoracled queries in the graded window: {rows_only}"
-
-
-def test_no_oracled_query_stales_outside_the_window():
-    """Staleness guard (VERDICT r6 item 7): the driver grades 50 of 129
-    registry entries per round, so a query can silently drift N rounds
-    away from its last green row while the code under it churns — that
-    is how x_embed_normalize reached r7 with an r1-only green. Invariant
-    pinned here: every oracled query is either (a) green in one of the
-    two most recent CORRECTNESS artifacts, or (b) scheduled in the
-    CURRENT window (FRONT_ORDER), i.e. its next row arrives this round.
-    A failure names the queries two churn-rounds from their last grade
-    that the current rotation forgot."""
-    import json
-    import re
-    from pathlib import Path
-
-    from hive_scripts_spark.plans.registry import FRONT_ORDER, ORACLES
-
-    root = Path(__file__).resolve().parents[1]
-    artifacts = sorted(root.glob("CORRECTNESS_r*.json"))
-    if len(artifacts) < 2:
-        return  # not enough history to judge staleness
-    latest_round = max(
-        int(re.search(r"r(\d+)", p.stem).group(1)) for p in artifacts
-    )
-    last_green: dict[str, int] = {}
-    for p in artifacts:
-        rnd = int(re.search(r"r(\d+)", p.stem).group(1))
-        for name, row in json.load(open(p)).items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                last_green[name] = max(last_green.get(name, 0), rnd)
-
-    window = set(FRONT_ORDER)
-    stale = sorted(
-        name
-        for name in ORACLES
-        if last_green.get(name, 0) < latest_round - 1 and name not in window
-    )
-    assert not stale, (
-        f"oracled queries with no green row since r{latest_round - 1} "
-        f"and no slot in the current window: {stale}"
-    )
-
-
-def test_no_query_emits_nested_output_types(spark):
-    """The driver's canonicalizer (pandas sort_values + value hash)
-    cannot hash list/map/struct cells — that was the r5
-    x_embed_quantize harness ERROR. Lock EVERY registered query to flat
-    scalar output columns (schema-only check: builds each plan, runs
-    nothing)."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    from hive_scripts_spark.plans.registry import QUERIES
-
-    offenders = {}
-    for name, fn in QUERIES.items():
-        schema = fn(spark, "/root/testdata/sf0.001").schema
-        hairy = [
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
+def test_queries_are_in_registration_order():
+    # the registry imports the three query modules in this order, and each
+    # registers its queries top to bottom: no other input reorders them
+    plans = Path(__file__).resolve().parents[1] / "hive_scripts_spark" / "plans"
+    names = []
+    for module in ("analytics_queries", "extension_queries", "reference_queries"):
+        tree = ast.parse((plans / f"{module}.py").read_text())
+        calls = [
+            node
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "register"
         ]
-        if hairy:
-            offenders[name] = hairy
-    assert not offenders, offenders
+        calls.sort(key=lambda node: (node.lineno, node.col_offset))
+        names += [ast.literal_eval(node.args[0]) for node in calls]
+    assert list(entry_mod.queries()) == names

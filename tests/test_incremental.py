@@ -523,3 +523,23 @@ def test_scd2_single_exchange_plan(spark):
         (1, "a3", 9, None),
         (2, "b", 0, None),
     ]
+
+
+def test_merge_upsert_query_changes_fire(spark):
+    """x_merge_upsert at sf0.01: the row count shrinks only by the
+    tombstones, and both the tombstone and the re-price arms are
+    non-empty."""
+    from hive_scripts_spark.plans.registry import QUERIES
+    from hive_scripts_spark.sources.readers import table
+
+    merged = QUERIES["x_merge_upsert"](spark, "/root/testdata/sf0.01")
+    orders = table(spark, "/root/testdata/sf0.01", "orders")
+    n_orders = orders.count()
+    n_tombstoned = orders.where(
+        (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 3 == 0)
+    ).count()
+    n_repriced = orders.where(
+        (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 3 != 0)
+    ).count()
+    assert n_tombstoned > 0 and n_repriced > 0
+    assert merged.count() == n_orders - n_tombstoned

@@ -2145,3 +2145,50 @@ def test_all_codec_paths_survive_byte_flip_fuzz(spark):
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     assert M.resize_images(df, target=(4, 4), fake=False).count() == len(rows)
     M.extract_frames(df, every_n=1).count()  # must not raise
+
+
+def test_frame_md5_literals():
+    """x_multimodal_frames' oracle md5 literals are exactly the md5 of
+    the registered JPEG plan literals — re-derived so an edit to either
+    side fails."""
+    import hashlib
+
+    from hive_scripts_spark.plans.extension_queries import (
+        _JPEG_GRAY_HEX,
+        _JPEG_GRAY_MD5,
+    )
+
+    assert set(_JPEG_GRAY_MD5) == set(_JPEG_GRAY_HEX)
+    for g, want in _JPEG_GRAY_MD5.items():
+        assert hashlib.md5(bytes.fromhex(_JPEG_GRAY_HEX[g])).hexdigest() == want
+
+
+def test_png_plan_literals():
+    """x_multimodal_resize_png's plan literals are exactly this file's
+    encoder output for constant index-k images over _PNG_PALETTE."""
+    import numpy as np
+
+    from hive_scripts_spark.plans.extension_queries import (
+        _PNG_CONST_HEX,
+        _PNG_PALETTE,
+    )
+
+    for k, want in _PNG_CONST_HEX.items():
+        idx = np.full((8, 8), k, np.uint8)
+        got = _png(idx, color_type=3, bitd=2, palette=list(_PNG_PALETTE))
+        assert got.hex() == want, k
+
+
+def test_gif_plan_literals():
+    """x_multimodal_resize_gif's plan literals are exactly this file's
+    encoder output for constant index-k images over _GIF_PALETTE."""
+    import numpy as np
+
+    from hive_scripts_spark.plans.extension_queries import (
+        _GIF_CONST_HEX,
+        _GIF_PALETTE,
+    )
+
+    for k, want in _GIF_CONST_HEX.items():
+        idx = np.full((8, 8), k, np.uint8)
+        assert _gif(idx, list(_GIF_PALETTE)).hex() == want, k

@@ -606,6 +606,16 @@ def test_rank_trim_timestamp_values_match_window_form(spark):
     )
 
 
+def test_chunked_shares_the_sessionize_oracle():
+    """The chunked escalation is checked against the same oracle as the
+    single-window form: the two plans must give the same answer."""
+    from hive_scripts_spark.plans.registry import ORACLES
+
+    assert (
+        ORACLES["x_events_sessionize_chunked"] == ORACLES["x_events_sessionize"]
+    )
+
+
 def test_sessionize_chunked_bit_identical(spark):
     """r13 (VERDICT r12 item 6): the time-chunked sessionize escalation
     (chunk-local gap merge -> boundary-session stitch -> renumber) must

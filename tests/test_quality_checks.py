@@ -169,3 +169,20 @@ def test_referential_single_pass_and_empty(spark, frames):
     assert (empty["n_checked"], empty["n_violations"], empty["passed"]) == (
         0, 0, True
     )
+
+
+def test_expectations_query_branches_fire(spark):
+    """x_validate_expectations at sf0.01: three constraints fire and
+    three pass, so both report branches are exercised."""
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    out = QUERIES["x_validate_expectations"](spark, "/root/testdata/sf0.01").collect()
+    passed = {r["constraint"]: r["passed"] for r in out}
+    assert passed == {
+        "not_null:o_custkey": True,
+        "accepted_values:o_orderstatus": False,
+        "range:o_totalprice": False,
+        "regex:o_orderpriority": False,
+        "unique:o_orderkey": True,
+        "referential:o_custkey": True,
+    }

@@ -556,3 +556,19 @@ def test_stream_static_conflict_aborts_the_micro_batch(spark, tmp_path):
     )
     with pytest.raises(Exception, match="conflicting robots rules"):
         q.awaitTermination(240)
+
+
+def test_robots_query_decisions_per_arm(spark):
+    """x_robots_decisions: the six URL arms decide as RFC 9309
+    prescribes for the fixture rules — 0 no-match allow, 1 prefix
+    disallow, 2 longer-Allow override, 3 $-anchored wildcard disallow,
+    4 anchor miss via query string (allow), 5 non-URL passthrough."""
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    rows = QUERIES["x_robots_decisions"](
+        spark, "/root/testdata/sf0.001"
+    ).collect()
+    assert rows
+    expected = {0: True, 1: False, 2: True, 3: False, 4: True, 5: True}
+    for r in rows:
+        assert r["robots_allowed"] is expected[r["doc_id"] % 6], r

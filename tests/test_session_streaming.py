@@ -37,7 +37,7 @@ def test_session_stream_matches_batch(spark, tmp_path):
     )
     q.awaitTermination(240)
 
-    from hive_scripts_spark.plans.registry import table as load
+    from hive_scripts_spark.sources.readers import table as load
 
     batch = {
         (r["user_id"], r["session_start"]): (r["session_end"], r["n_events"])

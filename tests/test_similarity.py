@@ -133,7 +133,7 @@ def test_ivf_topk_recall(spark):
     from pyspark.sql import functions as F
 
     from hive_scripts_spark.operators.similarity import brute_force_topk, ivf_topk
-    from hive_scripts_spark.plans.registry import table
+    from hive_scripts_spark.sources.readers import table
 
     emb = table(spark, "/root/testdata/sf0.001", "embeddings")
     cents = [
@@ -187,7 +187,7 @@ def test_ivf_topk_quantized_matches_full_precision(spark):
     from pyspark.sql import functions as F
 
     from hive_scripts_spark.operators.similarity import ivf_topk, ivf_topk_quantized
-    from hive_scripts_spark.plans.registry import table
+    from hive_scripts_spark.sources.readers import table
 
     emb = table(spark, "/root/testdata/sf0.001", "embeddings")
     cents = [
@@ -426,21 +426,16 @@ def test_persisted_index_search_matches_recompute(spark):
     """Build-once/search-many parity: the stored-code search faces
     (x_ann_*_index_search) must return EXACTLY the recompute forms'
     rows — the index on disk is an implementation detail, not a
-    semantic change (both share one oracle for the same reason).
-    x_ann_pq_index_search retired from the registry in the r14 swap
-    but keeps its function (value-pinned in test_retired_queries.py),
-    so resolve by module attribute, not QUERIES."""
-    from hive_scripts_spark.plans import extension_queries as E
+    semantic change (both share one oracle for the same reason)."""
+    from hive_scripts_spark.plans.registry import QUERIES
 
     sf = "/root/testdata/sf0.001"
     for stored_q, recompute_q in (
         ("x_ann_pq_index_search", "x_ann_pq_topk"),
         ("x_ann_ivfpq_index_search", "x_ann_ivfpq_topk"),
     ):
-        stored = sorted(map(tuple, getattr(E, stored_q)(spark, sf).collect()))
-        recomputed = sorted(
-            map(tuple, getattr(E, recompute_q)(spark, sf).collect())
-        )
+        stored = sorted(map(tuple, QUERIES[stored_q](spark, sf).collect()))
+        recomputed = sorted(map(tuple, QUERIES[recompute_q](spark, sf).collect()))
         assert stored == recomputed, stored_q
 
 
@@ -913,3 +908,122 @@ def test_zero_norm_never_ranks_first(spark):
     cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
     ivf = {r["neighbor_id"]: r for r in S.ivf_topk(emb, cents, queries, k=3, nprobe=2).collect()}
     assert ivf[2]["cosine_sim"] == 0.0
+
+
+@pytest.mark.parametrize(
+    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+)
+def test_planted_margins(sf_dir):
+    """The two data properties x_embed_near_dup_planted's closed form
+    leans on, pinned with margin at both test scales (DuckDB-side, so
+    engine-independent):
+
+    1. no base row sits near the 2% energy boundary (the strict `>`
+       cannot flip between engines on a rounding ulp);
+    2. the max cross-base cosine among planted copies stays far below
+       the 0.99 threshold (< 0.9), so cross pairs can never enter the
+       output whatever the banding does.
+    """
+    from hive_scripts_spark.plans.extension_queries import PLANTED_ENERGY_CUT
+    from hive_scripts_spark.plans.oracle_helpers import duck_views
+
+    con = duck_views(sf_dir)
+    try:
+        boundary = con.sql(
+            f"""
+            with m as (
+              select list_dot_product(cast(embedding as double[]),
+                                      cast(embedding as double[])) as n2,
+                     cast(embedding[1] as double) as v0
+              from embeddings
+            )
+            select min(abs(v0 * v0 / n2 - {PLANTED_ENERGY_CUT})) from m
+            where n2 > 0
+            """
+        ).fetchone()[0]
+        assert boundary > 1e-9, f"energy-cut boundary margin: {boundary}"
+        max_cross = con.sql(
+            f"""
+            with m as (
+              select vec_id, cast(embedding as double[]) as vec,
+                     list_dot_product(cast(embedding as double[]),
+                                      cast(embedding as double[])) as n2,
+                     cast(embedding[1] as double) as v0
+              from embeddings
+            ), kept as (
+              select * from m
+              where n2 > 0 and v0 * v0 > {PLANTED_ENERGY_CUT} * n2
+            ), copies as (
+              select vec_id * 3 + c as cid, vec_id as base,
+                     case when c < 2 then vec
+                          else list_transform(
+                            vec,
+                            (x, i) -> case when i = 1 then -x else x end)
+                     end as vec
+              from kept, (select unnest([0, 1, 2]) as c)
+            )
+            select max(
+              list_dot_product(a.vec, b.vec)
+              / (sqrt(list_dot_product(a.vec, a.vec))
+                 * sqrt(list_dot_product(b.vec, b.vec))))
+            from copies a join copies b
+              on a.base < b.base
+            """
+        ).fetchone()[0]
+        assert max_cross < 0.9, f"max cross-base cosine: {max_cross}"
+    finally:
+        con.close()
+
+
+def test_planted_arms_fire(spark):
+    """x_embed_near_dup_planted at sf0.01: every kept base contributes
+    exactly its copy pair at cosine 1.0, and the verify-kill arm is not
+    vacuous — a threshold below the flip bound surfaces strictly more
+    pairs (the flip/cross candidates the 0.99 run verified away)."""
+    from hive_scripts_spark.plans.extension_queries import (
+        planted_embedding_copies,
+    )
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    sf_dir = "/root/testdata/sf0.01"
+    rows = QUERIES["x_embed_near_dup_planted"](spark, sf_dir).collect()
+    got = {(r["a_id"], r["b_id"]): r["cosine_sim"] for r in rows}
+    assert len(got) > 0
+    assert all(v == 1.0 for v in got.values())
+    assert all(b == a + 1 and a % 3 == 0 for a, b in got)
+    loose = S.embedding_near_dup_pairs(
+        planted_embedding_copies(spark, sf_dir), threshold=0.5, use_lsh=True
+    )
+    n_loose = loose.count()
+    assert n_loose > len(got), (loose, n_loose, len(got))
+
+
+def test_semantic_dedup_model_probe_tracks_ivf_literal_threshold(
+    spark, monkeypatch
+):
+    """semantic_dedup collects the centroid model once and hands it to
+    ivf_assign, which must see exactly literal_threshold + 1 rows to
+    pick its route: the probe size and the threshold cannot drift."""
+    import inspect
+
+    default = (
+        inspect.signature(S.ivf_assign).parameters["literal_threshold"].default
+    )
+    seen = {}
+
+    class _Stop(Exception):
+        pass
+
+    def spy(*args, **kwargs):
+        seen["model"] = len(kwargs["_model"])
+        seen["threshold"] = kwargs.get("literal_threshold", default)
+        raise _Stop
+
+    monkeypatch.setattr(S, "ivf_assign", spy)
+    cents = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(default + 10)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(_Stop):
+        S.semantic_dedup(cents, cents)
+    assert seen["model"] == seen["threshold"] + 1

@@ -589,3 +589,49 @@ def test_countmin_lookup_reserved_key_col_case_insensitive(spark):
     keys = spark.createDataFrame([("a",)], "EST_COUNT string")
     with pytest.raises(ValueError, match="collides"):
         SK.countmin_lookup(sk, keys, "EST_COUNT", depth=2, width=8)
+
+
+def test_kmv_query_covers_both_estimator_arms(spark):
+    """x_kmv_distinct: sf0.001 has 150 distinct custkeys (< k=256, the
+    exact under-full branch) and sf0.01 has 1500 (> k, the
+    (k-1)*2^60/h_k estimator branch), so the parity run covers both."""
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    under = QUERIES["x_kmv_distinct"](spark, "/root/testdata/sf0.001").head()
+    over = QUERIES["x_kmv_distinct"](spark, "/root/testdata/sf0.01").head()
+    assert under["n_hashes"] < 256
+    assert under["est_distinct"] == float(under["n_hashes"])
+    assert over["n_hashes"] == 256
+    assert over["est_distinct"] != float(over["n_hashes"])
+
+
+def test_countmin_query_never_underestimates(spark):
+    """x_countmin_heavy at sf0.01: every supplier estimate is at least
+    its true lineitem frequency (count-min is one-sided)."""
+    from hive_scripts_spark.plans.registry import QUERIES
+    from hive_scripts_spark.sources.readers import table
+
+    est = QUERIES["x_countmin_heavy"](spark, "/root/testdata/sf0.01")
+    true = (
+        table(spark, "/root/testdata/sf0.01", "lineitem")
+        .groupBy(F.col("l_suppkey").alias("s_suppkey"))
+        .agg(F.count(F.lit(1)).alias("true_count"))
+    )
+    joined = est.join(true, "s_suppkey", "left").select(
+        "est_count", F.coalesce("true_count", F.lit(0)).alias("true_count")
+    )
+    assert joined.where(F.col("est_count") < F.col("true_count")).count() == 0
+
+
+def test_digit_quantile_query_picks_are_value_monotone(spark):
+    """x_digit_quantiles at sf0.01: the picked buckets' value order key
+    ``sign * (decade*1000 + sub)`` is non-decreasing in q."""
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    rows = sorted(
+        QUERIES["x_digit_quantiles"](spark, "/root/testdata/sf0.01").collect(),
+        key=lambda r: r["q"],
+    )
+    assert [r["q"] for r in rows] == [0.25, 0.5, 0.75, 0.95, 0.99]
+    ords = [r["sign"] * (r["decade"] * 1000 + r["sub"]) for r in rows]
+    assert ords == sorted(ords)

@@ -47,7 +47,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
     # batch twin
     bev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    from hive_scripts_spark.plans.registry import table as load
+    from hive_scripts_spark.sources.readers import table as load
 
     bev = load(spark, SF_DIR, "events")
     p = bev.where("event_type = 'purchase'").select(

@@ -73,7 +73,7 @@ def test_streaming_partition_counts(spark, tmp_path):
     got = spark.table("spc")
     assert got.count() > 0
     # every emitted (window, type) count matches the batch groupBy
-    from hive_scripts_spark.plans.registry import table as load
+    from hive_scripts_spark.sources.readers import table as load
     from pyspark.sql import functions as F
 
     ev = load(spark, SF_DIR, "events")
@@ -94,7 +94,7 @@ def test_streaming_count_reconcile(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from hive_scripts_spark.plans.registry import table as load
+    from hive_scripts_spark.sources.readers import table as load
     from hive_scripts_spark.streaming.reconcile import streaming_count_reconcile
     from hive_scripts_spark.streaming.windowed import streaming_partition_counts
 
@@ -212,7 +212,7 @@ def test_watermark_drop_count_sees_late_data(spark, tmp_path):
     reports them (and that they are indeed absent from the output)."""
     from pyspark.sql import functions as F
 
-    from hive_scripts_spark.plans.registry import table as load
+    from hive_scripts_spark.sources.readers import table as load
     from hive_scripts_spark.streaming.windowed import (
         hourly_event_counts,
         watermark_drop_count,

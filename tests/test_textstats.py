@@ -139,7 +139,7 @@ def test_word_entropy_exact_values(spark):
 
 def test_word_entropy_zero_exchange_plan(spark):
     from hive_scripts_spark.operators.textstats import word_entropy
-    from hive_scripts_spark.plans.registry import table
+    from hive_scripts_spark.sources.readers import table
 
     docs = table(spark, "/root/testdata/sf0.001", "documents")
     plan = word_entropy(docs)._jdf.queryExecution().executedPlan().toString()
@@ -737,3 +737,23 @@ def test_html_to_text_unrelated_case_duplicate_allowed(spark):
     df = base.withColumnRenamed("other", "EXTRA")
     row = X.html_to_text(df).collect()[0]
     assert (row["doc_id"], row["text"]) == (1, "hi")
+
+
+@pytest.mark.parametrize(
+    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+)
+def test_rolling_planted_margin(sf_dir):
+    """x_doc_rolling_hash_planted's md5-join closed form leans on one
+    data property: no two distinct docs share identical normalized text
+    (else their cross pairs would join the output)."""
+    from hive_scripts_spark.plans.extension_queries import _NORM
+    from hive_scripts_spark.plans.oracle_helpers import duck_views
+
+    con = duck_views(sf_dir)
+    try:
+        n, d = con.sql(
+            f"select count(*), count(distinct md5({_NORM})) from documents"
+        ).fetchone()
+        assert n == d, f"{n - d} duplicate normalized texts"
+    finally:
+        con.close()

@@ -67,7 +67,7 @@ def repr_dirs(tmp_path_factory):
 
 
 def test_table_normalizes_all_representations(spark, repr_dirs):
-    from hive_scripts_spark.plans.registry import table
+    from hive_scripts_spark.sources.readers import table
 
     results = {}
     for name, d in repr_dirs.items():
@@ -106,7 +106,7 @@ def test_sessionize_identical_across_representations(spark, repr_dirs):
 
 def test_date_columns_normalized_like_events_ts(spark, tmp_path):
     # orders.o_orderdate / lineitem.l_shipdate ride the same dtype-driven
-    # path (registry._TS_COLUMNS); lock the wiring with two of the three
+    # path (readers._TS_COLUMNS); lock the wiring with two of the three
     # representations for orders
     us = [1_600_000_000_000_000, 1_600_086_400_000_000]
     base_cols = {
@@ -127,7 +127,7 @@ def test_date_columns_normalized_like_events_ts(spark, tmp_path):
             }
         )
         pq.write_table(tbl, str(d / "orders.parquet"))
-        from hive_scripts_spark.plans.registry import table
+        from hive_scripts_spark.sources.readers import table
 
         df = table(spark, str(d), "orders")
         assert dict(df.dtypes)["o_orderdate"] == "timestamp", name

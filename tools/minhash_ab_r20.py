@@ -79,7 +79,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from hive_scripts_spark.plans.registry import table
+    from hive_scripts_spark.sources.readers import table
     from hive_scripts_spark.session import get_spark
 
     spark = get_spark("minhash_ab_r20")

@@ -1,46 +1,22 @@
-"""Local stand-in for the driver's correctness gate: run every query in
-``queries()`` against its ``oracle_sql()`` twin on DuckDB and compare
-row count, column names, and an order-insensitive value hash.
+"""Run every query in ``queries()`` against its ``oracle_sql()`` twin on
+DuckDB and compare row count, column names, and an order-insensitive
+value hash (:func:`~hive_scripts_spark.plans.oracle_helpers.frame_digest`,
+the same check as ``tests/test_parity.py``).
 
 Usage: python tools/parity.py [sf_dir] [query ...]
+
+``SPARK_GRAFT_VANILLA=1`` runs on a bare session with none of
+``session.py``'s configs; ``SPARK_GRAFT_NO_BHJ=1`` disables broadcast
+joins.
 """
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-import duckdb
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _norm_value(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # repr of the double — exact match required (driver-style)
-        return repr(v)
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def frame_digest(cols: list[str], rows: list[tuple]) -> str:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x01".join(_norm_value(r[i]) for i in order) for r in rows
-    )
-    return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 
 def main() -> int:
@@ -48,11 +24,16 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as e
+    from hive_scripts_spark.plans.oracle_helpers import (
+        canonical_lines,
+        duck_views,
+        frame_digest,
+    )
 
     if os.environ.get("SPARK_GRAFT_VANILLA"):
-        # driver-faithful mode: a bare session with NONE of session.py's
-        # configs — catches anything that silently depends on them
-        # (nanosAsLong is set at runtime by plans.registry.table)
+        # a bare session with NONE of session.py's configs — catches
+        # anything that silently depends on them (nanosAsLong is set at
+        # runtime by sources.readers.table)
         from pyspark.sql import SparkSession
 
         spark = (
@@ -75,11 +56,7 @@ def main() -> int:
         # by construction, not by threshold.)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
 
     queries, oracles = e.queries(), e.oracle_sql()
     failures = []
@@ -106,27 +83,29 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {type(ex).__name__}: {ex}")
             continue
         problems = []
+        digest = frame_digest(scols, srows)
         if len(srows) != len(drows):
             problems.append(f"rows {len(srows)} vs {len(drows)}")
         if sorted(scols) != sorted(dcols):
             problems.append(f"cols {sorted(scols)} vs {sorted(dcols)}")
-        elif frame_digest(scols, srows) != frame_digest(dcols, drows):
+        elif digest != frame_digest(dcols, drows):
             problems.append("value-hash mismatch")
         if problems:
             failures.append(name)
             print(f"FAIL  {name}: {'; '.join(problems)}")
-            if "value-hash mismatch" in problems and srows and drows:
-                so = sorted(
-                    ["\x01".join(_norm_value(v) for v in r) for r in srows]
-                )
-                do = sorted(
-                    ["\x01".join(_norm_value(v) for v in r) for r in drows]
-                )
-                diff = [(a, b) for a, b in zip(so, do) if a != b][:3]
+            if "value-hash mismatch" in problems:
+                diff = [
+                    (a, b)
+                    for a, b in zip(
+                        canonical_lines(scols, srows),
+                        canonical_lines(dcols, drows),
+                    )
+                    if a != b
+                ][:3]
                 for a, b in diff:
                     print(f"      spark: {a!r}\n      duck:  {b!r}")
         else:
-            print(f"PASS  {name} ({len(srows)} rows)")
+            print(f"PASS  {name} ({len(srows)} rows) {digest}")
     spark.stop()
     print(f"\n{len(failures)} failures" if failures else "\nall green")
     return 1 if failures else 0

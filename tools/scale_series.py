@@ -69,9 +69,9 @@ TOP10 = [
     "x_events_sliding",
 ]
 
-#: the rows the r18 capacity swap registered — new enough that their
-#: scale posture has no committed evidence yet, so the series carries
-#: them alongside the sweep top-10
+#: rows registered in r18 — new enough that their scale posture had no
+#: committed evidence yet, so the series carries them alongside the
+#: sweep top-10
 NEW_R18 = ["x_digit_hist", "x_digit_quantiles", "x_robots_decisions"]
 
 _CLK_TCK = float(os.sysconf("SC_CLK_TCK")) if hasattr(os, "sysconf") else 100.0

@@ -80,7 +80,7 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from hive_scripts_spark.plans.registry import table
+    from hive_scripts_spark.sources.readers import table
     from hive_scripts_spark.session import get_spark
     import hive_scripts_spark.operators.dedup as D
     import hive_scripts_spark.operators.similarity as S

@@ -24,16 +24,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
 def main() -> int:
-    import duckdb
     from pyspark.sql import SparkSession
 
+    from hive_scripts_spark.plans.oracle_helpers import duck_views
     from hive_scripts_spark.plans.registry import ORACLES, QUERIES
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -45,11 +39,7 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
 
     fatal = []
     for name in names:
