@@ -40,6 +40,14 @@ def ensure_parallelism(df: DataFrame, parallelism: int | None) -> DataFrame:
     Width probe: ``df.rdd.getNumPartitions()`` plans the frame (no job
     runs) and reads the physical scan's split count — file listing is
     session-cached, so the probe costs milliseconds.
+
+    Precondition: ``df`` must be scan-rooted — a read, optionally with
+    narrow projections and filters on top, and no shuffle. On a
+    shuffle-rooted plan the probe reads the static shuffle width
+    (``spark.sql.shuffle.partitions``), not the data's, so a narrow
+    input behind an exchange silently skips the widening. Call it on
+    the caller's input frame, before any join, aggregate or
+    repartition is planned on top.
     """
     if not parallelism:
         return df

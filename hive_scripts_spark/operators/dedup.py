@@ -566,23 +566,10 @@ def _lsh_routed_jaccard_pairs(
     """`ngram_jaccard_pairs` above its doc cap: LSH-blocked candidates,
     exact Jaccard verify, identical output schema to the exhaustive path
     (``n_common``/``n_a``/``n_b`` from the shingle sets directly)."""
-    banded = minhash_band_buckets(df, text_col, id_col, n)
-    # NO explicit repartition before the self-join (r20 — the same
-    # revert as minhash_lsh_pairs, whose A/B at sf0.1 AND a 50k-doc
-    # synthetic measured the forced exchange slower/flat with 3-5 more
-    # exchanges): this routed path only engages above max_docs (100k+),
-    # where the banded table outgrows broadcast range and the join's own
-    # per-branch exchanges are canonically identical — AQE's stage cache
-    # computes the signature fold once either way.
-    lhs = banded.toDF("a_id", "band", "bucket")
-    rhs = banded.toDF("b_id", "band", "bucket")
-    candidates = (
-        lhs.join(rhs, ["band", "bucket"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
     sets = shingle_sets(df, text_col, id_col, n)
+    candidates = _band_candidates(
+        _xxhash64_band_rows(sets, id_col, num_hashes=32, bands=8)
+    )
     n_common = F.size(F.array_intersect("a_sh", "b_sh")).cast("long")
     n_a = F.size("a_sh").cast("long")
     n_b = F.size("b_sh").cast("long")
@@ -606,11 +593,6 @@ def _lsh_routed_jaccard_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # ---------------------------------------------------------------------------
-
-
-def _shingle_hash(seed: int):
-    """Deterministic 64-bit hash of a shingle under a seed (xxhash64)."""
-    return lambda c: F.xxhash64(F.lit(seed), c)
 
 
 def _cap_buckets(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
@@ -699,38 +681,43 @@ def _minhash_fold(shingles, num_hashes: int, finish=None):
     )
 
 
-def minhash_band_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
+def _bands_from_signature(sig, num_hashes: int, bands: int):
+    """Band-bucket array of a MinHash signature: band ``b``'s bucket is
+    ``xxhash64(b, rows...)`` over its ``num_hashes // bands`` slots.
+    One definition for the fold's ``finish`` lambda
+    (:func:`minhash_band_buckets`) and for STORED signatures (the
+    persisted index), so an index built from signatures interoperates
+    with the recompute chain by construction."""
+    rows_per_band = num_hashes // bands
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.xxhash64(
+            b,
+            *[
+                F.element_at(sig, b * rows_per_band + r + 1)
+                for r in range(rows_per_band)
+            ],
+        ),
+    )
+
+
+def _xxhash64_band_rows(
+    sets: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
-    """``(id, band, bucket)`` rows: the LSH blocking keys.
+    """``(id, band, bucket)`` of the production (xxhash64) family over
+    ``sets = (id_col, shingles)``.
 
     The band buckets are computed in the fold's ``finish`` lambda —
     ``acc`` there is a lambda variable, so hashing it per band costs one
     array read, not one fold re-evaluation (the CollapseProject trap).
     """
-    rows_per_band = num_hashes // bands
-
-    def finish(acc):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.xxhash64(
-                b,
-                *[
-                    F.element_at(acc, b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ],
-            ),
-        )
-
-    sets = shingle_sets(df, text_col, id_col, n)  # already drops shingle-less docs
     bucketed = sets.select(
         F.col(id_col),
-        _minhash_fold(F.col("shingles"), num_hashes, finish).alias("__buckets"),
+        _minhash_fold(
+            F.col("shingles"),
+            num_hashes,
+            lambda acc: _bands_from_signature(acc, num_hashes, bands),
+        ).alias("__buckets"),
     )
     # posexplode_OUTER: InferFiltersFromGenerate adds a pushed-down
     # `size(__buckets) > 0` guard for non-outer generators, substituting
@@ -739,6 +726,133 @@ def minhash_band_buckets(
     return bucketed.select(
         F.col(id_col), F.posexplode_outer("__buckets").alias("band", "bucket")
     )
+
+
+def _md5_band_rows(
+    sets: DataFrame, id_col: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """``(id, band, bucket)`` of the engine-portable (md5) family — the
+    only stage :func:`minhash_lsh_pairs_portable` does not share with
+    the production path, and the one its DuckDB oracle replays: slot
+    ``i`` is the min over shingles of a 32-bit window of
+    ``md5(seed | shingle)``; band ``b``'s bucket is the md5 of
+    ``"<b>:<slots, comma-joined>"``."""
+    rows_per_band = num_hashes // bands
+    # hash family i = disjoint 8-hex (32-bit) window ⌊i/4⌋·4 of
+    # md5(seed(i) | shingle): md5 bits are uniformly mixed, so disjoint
+    # windows of one digest act as independent uniform draws — 4 hash
+    # functions per md5 call means num_hashes/4 md5s per shingle instead
+    # of num_hashes (measured ~3× on the signature stage). Staged in two
+    # projections so each digest is computed once, then windowed.
+    n_digests = (num_hashes + 3) // 4
+    digests = F.transform(
+        F.col("shingles"),
+        lambda s: F.array(
+            *[
+                F.md5(F.concat_ws("|", F.lit(str(seed)), s))
+                for seed in range(n_digests)
+            ]
+        ),
+    )
+    staged = sets.select(F.col(id_col), "shingles", digests.alias("__dg"))
+    def _window(i):
+        # closure factory keeps the lambda 1-ary: a 2-ary lambda would
+        # receive the ARRAY INDEX as its second argument (pyspark infers
+        # arity), clobbering a captured `i=i` default
+        return lambda d: F.conv(
+            F.substring(d[i // 4], 1 + 8 * (i % 4), 8), 16, 10
+        ).cast("long")
+
+    sig = F.array(
+        *[
+            F.array_min(F.transform(F.col("__dg"), _window(i)))
+            for i in range(num_hashes)
+        ]
+    )
+    signed = staged.select(F.col(id_col), sig.alias("__sig"))
+    buckets = F.array(
+        *[
+            F.md5(
+                F.concat_ws(
+                    ":",
+                    F.lit(str(b)),
+                    F.concat_ws(
+                        ",",
+                        *[
+                            F.element_at(
+                                F.col("__sig"), b * rows_per_band + r + 1
+                            ).cast("string")
+                            for r in range(rows_per_band)
+                        ],
+                    ),
+                )
+            )
+            for b in range(bands)
+        ]
+    )
+    return signed.select(
+        F.col(id_col), F.posexplode_outer(buckets).alias("band", "bucket")
+    )
+
+
+def minhash_band_buckets(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    num_hashes: int = 32,
+    bands: int = 8,
+) -> DataFrame:
+    """``(id, band, bucket)`` rows: the LSH blocking keys of the
+    production (xxhash64) family."""
+    sets = shingle_sets(df, text_col, id_col, n)  # already drops shingle-less docs
+    return _xxhash64_band_rows(sets, id_col, num_hashes, bands)
+
+
+def _band_candidates(banded: DataFrame) -> DataFrame:
+    """Distinct ``(a_id, b_id)`` pairs, ``a_id < b_id``, of docs that
+    share any ``(band, bucket)`` of ``banded = (id, band, bucket)``.
+
+    NO explicit repartition before the self-join (r20, reverting the
+    r19 "shared shuffle AQE reuses" bet — VERDICT r19 item 1): the
+    runtime A/B (tools/minhash_ab_r20.py; plans/r20/minhash_ab_*)
+    measured the repartitioned form SLOWER at sf0.1 (best 1.375 vs
+    1.138 s) AND at a 50k-doc synthetic 10× (2.426 vs 2.421 s, 14 vs
+    9 exchanges), because at broadcastable sizes AQE picks a BHJ for
+    the candidate join — the forced exchange is pure overhead — while
+    the raw-scan exchange is ALREADY ReusedExchange across branches in
+    the executed plan either way. Above broadcast size the join plans
+    one canonically-identical exchange per branch, which AQE's stage
+    cache dedupes without any help from us.
+    """
+    lhs = banded.toDF("a_id", "band", "bucket")
+    rhs = banded.toDF("b_id", "band", "bucket")
+    return (
+        lhs.join(rhs, ["band", "bucket"])
+        .where(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id")
+        .distinct()
+    )
+
+
+def _minhash_lsh_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    max_bucket_size: int | None,
+    band_rows,
+) -> DataFrame:
+    """The banded-MinHash LSH pipeline shared by both hash families:
+    ``shingle_sets`` (once) → ``band_rows`` (the family's
+    ``(id, band, bucket)``) → :func:`_cap_buckets` →
+    :func:`_band_candidates` → :func:`_verify_pairs_jaccard`."""
+    sets = shingle_sets(df, text_col, id_col, n)
+    banded = _cap_buckets(band_rows(sets, id_col, num_hashes, bands), max_bucket_size)
+    return _verify_pairs_jaccard(_band_candidates(banded), sets, id_col, threshold)
 
 
 def minhash_lsh_pairs(
@@ -782,31 +896,13 @@ def minhash_lsh_pairs(
     # testdata case), a pre-repartition buys full-core parallelism.
     # Width-gated (r20): on a many-file lake the scan is already wide
     # and ensure_parallelism self-disables instead of moving the bytes.
+    # It reads the width of the caller's (scan-rooted) frame, before
+    # any stage of the pipeline is planned on top of it.
     df = ensure_parallelism(df, parallelism)
-    banded = minhash_band_buckets(df, text_col, id_col, n, num_hashes, bands)
-    banded = _cap_buckets(banded, max_bucket_size)
-    # NO explicit repartition before the self-join (r20, reverting the
-    # r19 "shared shuffle AQE reuses" bet — VERDICT r19 item 1): the
-    # runtime A/B (tools/minhash_ab_r20.py; plans/r20/minhash_ab_*)
-    # measured the repartitioned form SLOWER at sf0.1 (best 1.375 vs
-    # 1.138 s) AND at a 50k-doc synthetic 10× (2.426 vs 2.421 s, 14 vs
-    # 9 exchanges), because at broadcastable sizes AQE picks a BHJ for
-    # the candidate join — the forced exchange is pure overhead — while
-    # the raw-scan exchange is ALREADY ReusedExchange across branches in
-    # the executed plan either way. Above broadcast size the join plans
-    # one canonically-identical exchange per branch, which AQE's stage
-    # cache dedupes without any help from us.
-    lhs = banded.toDF("a_id", "band", "bucket")
-    rhs = banded.toDF("b_id", "band", "bucket")
-    candidates = (
-        lhs.join(rhs, ["band", "bucket"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
+    return _minhash_lsh_pairs(
+        df, text_col, id_col, n, num_hashes, bands, threshold,
+        max_bucket_size, _xxhash64_band_rows,
     )
-
-    sets = shingle_sets(df, text_col, id_col, n)
-    return _verify_pairs_jaccard(candidates, sets, id_col, threshold)
 
 
 def _verify_pairs_jaccard(
@@ -881,90 +977,24 @@ def minhash_lsh_pairs_portable(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """:func:`minhash_lsh_pairs` with an engine-portable (md5-based)
-    hash family, so the ENTIRE pipeline — shingle → minhash → banded
-    buckets → candidate pairs → exact-Jaccard verify — is replicable
-    verbatim in ANSI-SQL/DuckDB and value-gradable end-to-end. This is
-    the oracle twin that proves the banded-LSH machinery itself (the
-    xxhash64 production path differs only in the hash family).
+    hash family (:func:`_md5_band_rows`), so the ENTIRE pipeline —
+    shingle → minhash → banded buckets → candidate pairs → exact-Jaccard
+    verify — is replicable verbatim in ANSI-SQL/DuckDB and
+    value-gradable end-to-end. Every stage but the hash family is the
+    production pipeline itself, so the oracle grades the shared
+    machinery (bucket cap, candidate self-join, pair dedup, verify).
 
-    ``max_bucket_size`` mirrors :func:`minhash_lsh_pairs`'s degenerate-
-    bucket guard (drop (band, bucket) groups above the cap before
-    pairing) so the skew knob itself is value-gradable — the capped
-    registry twin replays the cap in its oracle.
+    ``max_bucket_size`` is :func:`minhash_lsh_pairs`'s degenerate-
+    bucket guard, so the skew knob itself is value-gradable — the
+    capped registry twin replays the cap in its oracle.
 
-    Same scale shape as the production path: signatures fold map-side,
-    candidates meet only inside (band, bucket) groups, verify cost is
-    O(candidates). The md5 family costs more than xxhash64 even with
-    the digest-windowing below — use :func:`minhash_lsh_pairs` for
-    production corpora.
+    The md5 family costs more than xxhash64 even with its digest
+    windowing — use :func:`minhash_lsh_pairs` for production corpora.
     """
-    rows_per_band = num_hashes // bands
-    sets = shingle_sets(df, text_col, id_col, n)
-    # hash family i = disjoint 8-hex (32-bit) window ⌊i/4⌋·4 of
-    # md5(seed(i) | shingle): md5 bits are uniformly mixed, so disjoint
-    # windows of one digest act as independent uniform draws — 4 hash
-    # functions per md5 call means num_hashes/4 md5s per shingle instead
-    # of num_hashes (measured ~3× on the signature stage). Staged in two
-    # projections so each digest is computed once, then windowed.
-    n_digests = (num_hashes + 3) // 4
-    digests = F.transform(
-        F.col("shingles"),
-        lambda s: F.array(
-            *[
-                F.md5(F.concat_ws("|", F.lit(str(seed)), s))
-                for seed in range(n_digests)
-            ]
-        ),
+    return _minhash_lsh_pairs(
+        df, text_col, id_col, n, num_hashes, bands, threshold,
+        max_bucket_size, _md5_band_rows,
     )
-    staged = sets.select(F.col(id_col), "shingles", digests.alias("__dg"))
-    def _window(i):
-        # closure factory keeps the lambda 1-ary: a 2-ary lambda would
-        # receive the ARRAY INDEX as its second argument (pyspark infers
-        # arity), clobbering a captured `i=i` default
-        return lambda d: F.conv(
-            F.substring(d[i // 4], 1 + 8 * (i % 4), 8), 16, 10
-        ).cast("long")
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("__dg"), _window(i)))
-            for i in range(num_hashes)
-        ]
-    )
-    signed = staged.select(F.col(id_col), sig.alias("__sig"))
-    buckets = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit(str(b)),
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(
-                                F.col("__sig"), b * rows_per_band + r + 1
-                            ).cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    ),
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = signed.select(
-        F.col(id_col), F.posexplode_outer(buckets).alias("band", "bucket")
-    )
-    banded = _cap_buckets(banded, max_bucket_size)
-    lhs = banded.toDF("a_id", "band", "bucket")
-    rhs = banded.toDF("b_id", "band", "bucket")
-    candidates = (
-        lhs.join(rhs, ["band", "bucket"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    return _verify_pairs_jaccard(candidates, sets, id_col, threshold)
 
 
 def dedup_keep_min(pairs: DataFrame, df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1476,24 +1506,6 @@ def cross_corpus_dedup(
 # ---------------------------------------------------------------------------
 
 
-def _bands_from_signature(sig, num_hashes: int, bands: int):
-    """Band-bucket array derived from a STORED signature — byte-identical
-    to the buckets :func:`minhash_band_buckets` computes inline (same
-    ``xxhash64(band, rows...)`` combine), so an index built from
-    signatures interoperates with the recompute chain."""
-    rows_per_band = num_hashes // bands
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(
-            b,
-            *[
-                F.element_at(sig, b * rows_per_band + r + 1)
-                for r in range(rows_per_band)
-            ],
-        ),
-    )
-
-
 def _index_meta_path(index_dir: str) -> str:
     return f"{index_dir}/meta"
 
@@ -1619,13 +1631,11 @@ def minhash_index_dedup_pairs(
     )
     candidates = cross
     if include_batch_pairs:
-        rhs = new_b.toDF("match_id", "band", "bucket")
-        batch = (
-            new_b.join(rhs, ["band", "bucket"])
-            .where(F.col("new_id") > F.col("match_id"))  # keep-first: match the OLDER id
-            .select("new_id", "match_id")
-            .distinct()
-            .withColumn("match_source", F.lit("batch"))
+        # keep-first: the newer id of a batch pair matches the OLDER one
+        batch = _band_candidates(new_b).select(
+            F.col("b_id").alias("new_id"),
+            F.col("a_id").alias("match_id"),
+            F.lit("batch").alias("match_source"),
         )
         candidates = cross.unionByName(batch)
     a_side = new_sigs.toDF("new_id", "__a_sig")

@@ -6,7 +6,9 @@ sits beside the WARC → html_to_text → urls chain: build host→host
 edges from extracted anchors, score hosts, join the score back onto
 documents as a curation signal.
 
-Two faces, the portable-twin pattern of ``minhash_lsh_pairs_portable``:
+Two faces, a production face and an engine-portable twin gradable in
+DuckDB (as in ``dedup``, where ``minhash_lsh_pairs_portable`` is a thin
+wrapper that runs the production pipeline with the md5 hash family):
 
 * :func:`pagerank` — standard double-precision damped PageRank with
   dangling-mass redistribution. Production face; float sums make it

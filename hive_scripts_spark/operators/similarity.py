@@ -238,140 +238,12 @@ def embedding_near_dup_pairs(
                 stacklevel=2,
             )
             use_lsh = True
-    staged = _drop_invalid_vecs(embeddings, vec_col).select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("vec")
-    )
-    base = staged.select(id_col, "vec", l2_norm(F.col("vec")).alias("norm"))
     if use_lsh:
-        # The hyperplane components g(h, i) are DATA-INDEPENDENT
-        # (seeded xxhash64 of the plane/dim indices), so evaluate them
-        # ONCE through the very same engine expressions on a one-row
-        # probe and embed the resulting doubles as plan literals (r19):
-        # signatures come out bit-identical (same g values, same
-        # multiply/fold order), while each row stops paying
-        # tables × bits × dim hash+mod evaluations — and the driver
-        # stops paying the 14 s py4j construction of that expression
-        # forest. The probe is one bounded job (tables × bits × dim
-        # doubles of model-parameter scale). Empty corpus: no probe row
-        # → fall back to the in-row expression form (result is empty
-        # either way; the fallback keeps the plan analyzable).
-        n_planes = lsh_tables * lsh_bits
-        # the probe select and the per-table signatures render as SQL
-        # strings (one parser call each) — the Column-by-Column form of
-        # these 16-plane expression forests cost ~2 s of py4j per query
-        # build. The SQL trees are the identical expressions (same %
-        # chain, same CASE/shiftleft, same left-assoc OR), pinned by
-        # tests/test_plan_literals.py.
-        probe = (
-            staged.limit(1)
-            .select(
-                *[
-                    F.expr(_hyperplane_components_sql(h)).alias(f"g{h}")
-                    for h in range(n_planes)
-                ]
-            )
-            .collect()
+        return _hyperplane_lsh_pairs(
+            embeddings, threshold, id_col, vec_col, lsh_tables, lsh_bits,
+            _xxhash64_planes,
         )
-        if probe:
-            plane_sql = [
-                sql_double_array(probe[0][f"g{h}"]) for h in range(n_planes)
-            ]
-            dim = len(probe[0]["g0"])
-
-            def table_sig_sql(t):
-                bits_sql = []
-                for b in range(lsh_bits):
-                    proj = (
-                        f"aggregate(zip_with(vec, {plane_sql[t * lsh_bits + b]}, "
-                        "(x, g) -> x * g), 0.0D, (acc, v) -> acc + v)"
-                    )
-                    bits_sql.append(
-                        f"(CASE WHEN {proj} > 0 "
-                        f"THEN shiftleft(CAST(1 AS BIGINT), {b}) "
-                        "ELSE CAST(0 AS BIGINT) END)"
-                    )
-                return " | ".join(bits_sql)
-
-            # ragged-dimension guard (ADVICE r19): the plane literals
-            # are pinned to the PROBE row's dimension; a mismatched row
-            # would zip_with-null-pad, fold to NULL, and silently read
-            # all-zero signature bits (recall degradation that varies
-            # with whichever row limit(1) picked). Dimension uniformity
-            # is the table's schema contract (_drop_invalid_vecs
-            # docstring), so violation fails LOUDLY in-plan — one
-            # size() compare per row.
-            sigs_col = F.expr(
-                f"CASE WHEN size(vec) = {dim} THEN array("
-                + ",".join(
-                    f"named_struct('tbl', {t}, 'sig', {table_sig_sql(t)})"
-                    for t in range(lsh_tables)
-                )
-                + ") ELSE raise_error(concat("
-                "'embedding_near_dup_pairs: ragged embedding dimension ',"
-                " cast(size(vec) as string),"
-                f" ' != probe dimension {dim} (LSH hyperplane literals"
-                " require a dimension-uniform table; clean the input or"
-                " pass use_lsh=False)')) END"
-            )
-        else:
-            # empty corpus: no probe row — keep the in-row expression
-            # form (result is empty either way; plan stays analyzable)
-            sigs_col = F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        _hyperplane_signature(
-                            F.col("vec"), bits=lsh_bits, seed_base=t * lsh_bits
-                        ).alias("sig"),
-                    )
-                    for t in range(lsh_tables)
-                ]
-            )
-        # NARROW blocking (r10): emit (id, tbl, sig) only — no vectors.
-        # The previous shape carried (vec, norm) through the self-join
-        # and the pair dedup, which (a) shuffles O(candidates x vec
-        # bytes) through dropDuplicates — the same melt-traffic trap
-        # _verify_pairs_jaccard documents — and (b) evaluates the
-        # hyperplane-signature fold (tables x bits x dim HOF mults, the
-        # dominant CPU) once PER JOIN BRANCH under a broadcast
-        # self-join. Narrow rows are 3 longs; the shared repartition
-        # makes the two branches' shuffle stages canonically identical
-        # so AQE computes the signature fold ONCE and reuses the stage;
-        # vectors attach AFTER the 16-byte pair dedup via two id-keyed
-        # joins that AQE broadcasts (or shuffles once per side above
-        # broadcast size) — the verify-join posture.
-        blocked = base.select(
-            id_col, F.explode(sigs_col).alias("ts")
-        ).select(
-            id_col,
-            F.col("ts.tbl").alias("tbl"),
-            F.col("ts.sig").alias("sig"),
-        )
-        blocked = blocked.repartition("tbl", "sig")
-        lhs = blocked.toDF("a_id", "tbl", "sig")
-        rhs = blocked.toDF("b_id", "tbl", "sig")
-        cand = (
-            lhs.join(rhs, ["tbl", "sig"])
-            .where(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id")
-            .distinct()
-        )
-        pairs = cand.join(base.toDF("a_id", "a_vec", "a_norm"), "a_id").join(
-            base.toDF("b_id", "b_vec", "b_norm"), "b_id"
-        )
-        # zero-norm guard: see guarded_div — sim 0 / excluded, the
-        # numpy exhaustive path's convention
-        sim = F.round(
-            guarded_div(
-                dot(F.col("a_vec"), F.col("b_vec")),
-                F.col("a_norm") * F.col("b_norm"),
-            ),
-            6,
-        )
-        return (
-            pairs.select("a_id", "b_id", sim.alias("cosine_sim"))
-            .where(F.col("cosine_sim") >= threshold)
-        )
+    base = _staged_with_norms(embeddings, id_col, vec_col)
     # Exhaustive all-pairs, BLOCKED (r10): still O(n²) FLOPs — that is
     # this path's declared contract (the exactness baseline for the LSH
     # route) — but as bounded blocked-matmul tasks instead of a
@@ -498,21 +370,26 @@ def embedding_near_dup_pairs(
     )
 
 
-def _hyperplane_component(h: int, i):
-    """g(h, i) = ((xxhash64(h, i) % 1000003) / 1000003) − 0.5 — ONE
-    definition shared by the in-row signature expression and the r19
-    one-row probe that evaluates the planes into literals, so the two
-    routes cannot drift."""
-    u = (F.xxhash64(F.lit(h), i) % 1000003 + 1000003) % 1000003
-    return u.cast("double") / 1000003.0 - 0.5
+def _staged_with_norms(
+    embeddings: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """``(id, vec array<double>, norm)`` of the valid embedding rows —
+    the near-dup paths' staging. Each vector's L2 norm is staged ONCE
+    per row before any pair join (see :func:`embedding_near_dup_pairs`,
+    fold economy)."""
+    staged = _drop_invalid_vecs(embeddings, vec_col).select(
+        F.col(id_col), _as_double(F.col(vec_col)).alias("vec")
+    )
+    return staged.select(id_col, "vec", l2_norm(F.col("vec")).alias("norm"))
 
 
 def _hyperplane_components_sql(h: int) -> str:
-    """SQL text for the array of g(h, i), i in 0..len(vec)-1 — evaluated
-    on a one-row probe to turn the data-independent hyperplane into plan
-    literals. The tree is the exact SQL rendering of
-    :func:`_hyperplane_component` (same `%` chain, cast, divide,
-    subtract), so probed values equal the in-row expression's."""
+    """SQL text for the array of g(h, i), i in 0..len(vec)-1, with
+    g(h, i) = ((xxhash64(h, i) % 1000003) / 1000003) − 0.5 — the
+    production hyperplane family, evaluated on a one-row probe to turn
+    the data-independent hyperplane into plan literals (r19). The
+    literal route is pinned against the in-row expression form it
+    replaced by ``tests/test_plan_literals.py``."""
     return (
         "transform(sequence(0, size(vec) - 1), i -> "
         f"CAST((xxhash64({h}, i) % 1000003 + 1000003) % 1000003 AS DOUBLE)"
@@ -520,38 +397,18 @@ def _hyperplane_components_sql(h: int) -> str:
     )
 
 
-def _hyperplane_signature(vec, bits: int, seed_base: int = 0):
-    """Random-hyperplane LSH signature without rand(): hyperplane h's
-    component for dimension i is a deterministic pseudo-uniform drawn
-    from xxhash64(seed_base + h, i) — reproducible across runs.
-
-    sig bit h = sign(Σ_i vec[i] * g(h, i)) where
-    g(h,i) = ((xxhash64(h,i) % 1000003) / 1000003) - 0.5 (symmetric).
-    """
-    def component(h, i):
-        return _hyperplane_component(h, i)
-
-    def _weighted(h):
-        # closure factory: keeps the lambda 2-ary (pyspark infers arity)
-        return lambda x, i: x * component(h, i)
-
-    bit_cols = []
-    for h0 in range(bits):
-        h = seed_base + h0
-        proj = F.aggregate(
-            F.zip_with(vec, F.sequence(F.lit(0), F.size(vec) - 1), _weighted(h)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit_cols.append(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), h0)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    sig = bit_cols[0]
-    for c in bit_cols[1:]:
-        sig = sig.bitwiseOR(c)
-    return sig
+def _xxhash64_planes(probe: DataFrame, n_planes: int) -> list[list[float]]:
+    """The production hyperplanes: g(h, i) evaluated by the engine
+    (:func:`_hyperplane_components_sql`) on the one-row ``probe`` —
+    one bounded job of tables × bits × dim doubles. ``[]`` when the
+    probe has no row."""
+    rows = probe.select(
+        *[
+            F.expr(_hyperplane_components_sql(h)).alias(f"g{h}")
+            for h in range(n_planes)
+        ]
+    ).collect()
+    return [rows[0][f"g{h}"] for h in range(n_planes)] if rows else []
 
 
 def portable_hyperplane(h: int, dim: int) -> list[float]:
@@ -569,93 +426,107 @@ def portable_hyperplane(h: int, dim: int) -> list[float]:
     return out
 
 
-def embedding_lsh_pairs_portable(
+def _md5_planes(probe: DataFrame, n_planes: int) -> list[list[float]]:
+    """The portable hyperplanes (:func:`portable_hyperplane`), sized by
+    the one-row ``probe``'s dimension. ``[]`` when the probe has no
+    row."""
+    rows = probe.select(F.size("vec").alias("dim")).collect()
+    if not rows:
+        return []
+    return [portable_hyperplane(h, rows[0]["dim"]) for h in range(n_planes)]
+
+
+def _hyperplane_lsh_pairs(
     embeddings: DataFrame,
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tables: int = 2,
-    bits: int = 4,
-    dim: int | None = None,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    tables: int,
+    bits: int,
+    planes,
 ) -> DataFrame:
-    """:func:`embedding_near_dup_pairs` (LSH path) with an engine-
-    portable hyperplane family, so the ENTIRE pipeline — signature →
-    per-table bucket join → exact-cosine verify — is replicable in
-    DuckDB and value-gradable end-to-end (the xxhash64 production path
-    differs only in how the pseudo-random hyperplanes are drawn).
+    """The hyperplane-LSH near-dup pipeline shared by both hyperplane
+    families; ``planes(probe, tables * bits)`` (:func:`_xxhash64_planes`
+    or :func:`_md5_planes`) draws the hyperplanes from a one-row probe
+    of the staged frame, and is the only stage that differs.
 
-    Hyperplane ``h``'s component for dimension ``i`` is the symmetric
-    pseudo-uniform ``(md5_60(h, i) % 1000003) / 1000003 − 0.5`` (md5_60
-    = :func:`~hive_scripts_spark.operators.dedup.portable_hash60`);
-    signature bit = sign of the projection. Same OR-construction and
-    scale shape as the production path: shuffle keyed on (table,
-    signature), exact cosine verifies every candidate.
-
-    Pass ``dim`` (the embedding dimensionality) to fold the hyperplanes
-    into PLAN LITERALS via :func:`portable_hyperplane` — hyperplanes are
-    model parameters, not data, so baking them in makes each signature
-    a pure arithmetic fold (zero hashing per row — the same posture as
-    :func:`ivf_topk`'s literal centroids). Without ``dim`` the
-    components are re-derived row-side with md5 — identical values,
-    O(tables × bits × dim) hashes per row.
+    The hyperplanes are DATA-INDEPENDENT model parameters, so they ride
+    as plan literals (r19): each row's signature is a pure arithmetic
+    fold against literal doubles — no tables × bits × dim hash+mod
+    evaluations per row, and no 14 s py4j construction of that
+    expression forest on the driver. Empty corpus: no probe row → an
+    empty result of the same schema.
     """
-    from hive_scripts_spark.operators.dedup import portable_hash60
+    base = _staged_with_norms(embeddings, id_col, vec_col)
+    plane_vals = planes(base.limit(1), tables * bits)
+    if not plane_vals:
+        return base.select(
+            F.col(id_col).alias("a_id"),
+            F.col(id_col).alias("b_id"),
+            F.col("norm").alias("cosine_sim"),
+        ).limit(0)
+    plane_sql = [sql_double_array(p) for p in plane_vals]
+    dim = len(plane_vals[0])
 
-    staged = _drop_invalid_vecs(embeddings, vec_col).select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("vec")
-    )
-    # norms staged pre-join: one dot fold + divide per verified pair
-    base = staged.select(id_col, "vec", l2_norm(F.col("vec")).alias("norm"))
-
-    def component(h):
-        def g(x, i):
-            u = portable_hash60(F.lit(str(h)), i.cast("string")) % 1000003
-            return x * (u.cast("double") / 1000003.0 - 0.5)
-
-        return g
-
-    def projection(h):
-        if dim is not None:
-            # hyperplane as a plan literal: pure arithmetic fold per row
-            # (one-parser-call literal — see plan_literals)
-            plane = lit_doubles(portable_hyperplane(h, dim))
-            zipped = F.zip_with(F.col("vec"), plane, lambda x, g: x * g)
-        else:
-            zipped = F.zip_with(
-                F.col("vec"),
-                F.sequence(F.lit(0), F.size("vec") - 1),
-                component(h),
-            )
-        return F.aggregate(zipped, F.lit(0.0), lambda acc, v: acc + v)
-
-    def sig_for_table(t):
-        bit_cols = []
+    # the per-table signatures render as SQL strings (one parser call
+    # each) — the Column-by-Column form of these 16-plane expression
+    # forests cost ~2 s of py4j per query build. The SQL trees are the
+    # identical expressions (same CASE/shiftleft, same left-assoc OR),
+    # pinned by tests/test_plan_literals.py.
+    def table_sig_sql(t):
+        bits_sql = []
         for b in range(bits):
-            proj = projection(t * bits + b)
-            bit_cols.append(F.when(proj > 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(*bit_cols)
-
-    # narrow blocking + late vector attach — see embedding_near_dup_pairs
-    sigs = base.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"), sig_for_table(t).alias("sig")
-                    )
-                    for t in range(tables)
-                ]
+            proj = (
+                f"aggregate(zip_with(vec, {plane_sql[t * bits + b]}, "
+                "(x, g) -> x * g), 0.0D, (acc, v) -> acc + v)"
             )
-        ).alias("__s"),
-    ).select(
-        id_col,
-        F.col("__s.tbl").alias("tbl"),
-        F.col("__s.sig").alias("sig"),
+            bits_sql.append(
+                f"(CASE WHEN {proj} > 0 "
+                f"THEN shiftleft(CAST(1 AS BIGINT), {b}) "
+                "ELSE CAST(0 AS BIGINT) END)"
+            )
+        return " | ".join(bits_sql)
+
+    # ragged-dimension guard (ADVICE r19): the plane literals are
+    # pinned to the PROBE row's dimension; a mismatched row would
+    # zip_with-null-pad, fold to NULL, and silently read all-zero
+    # signature bits (recall degradation that varies with whichever row
+    # limit(1) picked). Dimension uniformity is the table's schema
+    # contract (_drop_invalid_vecs docstring), so violation fails
+    # LOUDLY in-plan — one size() compare per row.
+    sigs_col = F.expr(
+        f"CASE WHEN size(vec) = {dim} THEN array("
+        + ",".join(
+            f"named_struct('tbl', {t}, 'sig', {table_sig_sql(t)})"
+            for t in range(tables)
+        )
+        + ") ELSE raise_error(concat("
+        "'hyperplane LSH: ragged embedding dimension ',"
+        " cast(size(vec) as string),"
+        f" ' != probe dimension {dim} (the hyperplane literals"
+        " require a dimension-uniform table; clean the input)')) END"
     )
-    sigs = sigs.repartition("tbl", "sig")
-    lhs = sigs.toDF("a_id", "tbl", "sig")
-    rhs = sigs.toDF("b_id", "tbl", "sig")
+    # NARROW blocking (r10): emit (id, tbl, sig) only — no vectors.
+    # The previous shape carried (vec, norm) through the self-join
+    # and the pair dedup, which (a) shuffles O(candidates x vec
+    # bytes) through dropDuplicates — the same melt-traffic trap
+    # dedup._verify_pairs_jaccard documents — and (b) evaluates the
+    # hyperplane-signature fold (tables x bits x dim HOF mults, the
+    # dominant CPU) once PER JOIN BRANCH under a broadcast
+    # self-join. Narrow rows are 3 longs; the shared repartition
+    # makes the two branches' shuffle stages canonically identical
+    # so AQE computes the signature fold ONCE and reuses the stage;
+    # vectors attach AFTER the 16-byte pair dedup via two id-keyed
+    # joins that AQE broadcasts (or shuffles once per side above
+    # broadcast size) — the verify-join posture.
+    blocked = base.select(id_col, F.explode(sigs_col).alias("ts")).select(
+        id_col,
+        F.col("ts.tbl").alias("tbl"),
+        F.col("ts.sig").alias("sig"),
+    )
+    blocked = blocked.repartition("tbl", "sig")
+    lhs = blocked.toDF("a_id", "tbl", "sig")
+    rhs = blocked.toDF("b_id", "tbl", "sig")
     cand = (
         lhs.join(rhs, ["tbl", "sig"])
         .where(F.col("a_id") < F.col("b_id"))
@@ -665,8 +536,8 @@ def embedding_lsh_pairs_portable(
     pairs = cand.join(base.toDF("a_id", "a_vec", "a_norm"), "a_id").join(
         base.toDF("b_id", "b_vec", "b_norm"), "b_id"
     )
-    # zero-norm guard: see guarded_div — sim 0, never NaN or an ANSI
-    # DIVIDE_BY_ZERO (same convention as embedding_near_dup_pairs)
+    # zero-norm guard: see guarded_div — sim 0 / excluded, the numpy
+    # exhaustive path's convention
     sim = F.round(
         guarded_div(
             dot(F.col("a_vec"), F.col("b_vec")),
@@ -674,9 +545,34 @@ def embedding_lsh_pairs_portable(
         ),
         6,
     )
-    return (
-        pairs.select("a_id", "b_id", sim.alias("cosine_sim"))
-        .where(F.col("cosine_sim") >= threshold)
+    return pairs.select("a_id", "b_id", sim.alias("cosine_sim")).where(
+        F.col("cosine_sim") >= threshold
+    )
+
+
+def embedding_lsh_pairs_portable(
+    embeddings: DataFrame,
+    threshold: float = 0.35,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    tables: int = 2,
+    bits: int = 4,
+) -> DataFrame:
+    """:func:`embedding_near_dup_pairs` (LSH path) with an engine-
+    portable hyperplane family, so the ENTIRE pipeline — signature →
+    per-table bucket join → exact-cosine verify — is replicable in
+    DuckDB and value-gradable end-to-end. Every stage but the
+    hyperplane draw is the production pipeline itself
+    (:func:`_hyperplane_lsh_pairs`), ragged-dimension guard included.
+
+    Hyperplane ``h``'s component for dimension ``i`` is the symmetric
+    pseudo-uniform ``(md5_60(h, i) % 1000003) / 1000003 − 0.5`` (md5_60
+    = :func:`~hive_scripts_spark.operators.dedup.portable_hash60`;
+    driver-side :func:`portable_hyperplane`); signature bit = sign of
+    the projection.
+    """
+    return _hyperplane_lsh_pairs(
+        embeddings, threshold, id_col, vec_col, tables, bits, _md5_planes
     )
 
 

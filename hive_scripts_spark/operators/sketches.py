@@ -8,9 +8,11 @@ incremental-statistics twin of ``incremental.incremental_count_reconcile``.
 Two families here, both keyed on the engine-portable
 :func:`~hive_scripts_spark.operators.dedup.portable_hash60` (md5) so
 every estimate is exactly reproducible in ANSI SQL (the DuckDB-gradable
-sketch family, same philosophy as ``minhash_lsh_pairs_portable``; a
-production deployment would swap ``xxhash64`` in via the ``hash_fn``
-hook for ~3× cheaper hashing at identical plan shape). Pre-images go
+sketch family; as with ``minhash_lsh_pairs_portable``, which runs the
+production MinHash pipeline with the md5 family, the hash is the only
+part that differs: a production deployment would swap ``xxhash64`` in
+via the ``hash_fn`` hook for ~3× cheaper hashing at identical plan
+shape). Pre-images go
 through :func:`sketch_pre_image` — per-column fixed-width md5 blocks
 with a NULL sentinel — so distinct tuples never collide the way raw
 ``concat_ws`` strings do (``('a', NULL)`` vs ``(NULL, 'a')``,

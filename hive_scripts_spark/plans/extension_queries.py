@@ -615,13 +615,10 @@ def x_ann_lsh_portable(spark, sf_dir):
     portable) hyperplane family: signature → per-table bucket join →
     exact-cosine verify, replicated verbatim in the DuckDB oracle — the
     value-graded twin of the xxhash64 production path
-    ``x_ann_lsh_pairs`` (same OR-construction, engine-specific
-    hyperplanes, graded rows-only). The dim probe (one-row collect,
-    bounded metadata) lets the hyperplanes ride as plan literals —
-    zero per-row hashing, same posture as IVF's literal centroids."""
+    ``x_ann_lsh_pairs`` (one shared pipeline, engine-specific
+    hyperplanes, graded rows-only)."""
     emb = table(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").first()["embedding"])
-    return S.embedding_lsh_pairs_portable(emb, threshold=0.35, dim=dim)
+    return S.embedding_lsh_pairs_portable(emb, threshold=0.35)
 
 
 @register(

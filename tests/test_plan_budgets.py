@@ -40,6 +40,20 @@ BUDGETS = {
     # exchanges, both WindowGroupLimit-bounded (<= cap*salts rows/cell
     # shuffle); assignment is a map-only literal argmax (no exchange)
     "x_cluster_balanced_sample": 2,
+    # LSH pipelines (one per hash family — production and portable twin
+    # share every stage but the hash): a shuffle added to the shared
+    # pipeline, e.g. a stage planned twice behind an exchange, shows here.
+    # Counted at sf0.001: the (a_id, b_id) pair-dedup exchange, plus one
+    # per self-join branch for the bucket cap's count window and for the
+    # hyperplane (tbl, sig) repartition; the candidate and verify joins
+    # plan as broadcasts.
+    "x_dedup_minhash_lsh": 1,
+    "x_dedup_minhash_portable": 1,
+    "x_dedup_minhash_bucketcap": 3,
+    "x_ann_lsh_pairs": 3,
+    "x_ann_lsh_portable": 3,
+    "x_dedup_cross_near": 1,
+    "x_split_leakage": 1,
 }
 
 

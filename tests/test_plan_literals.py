@@ -112,6 +112,39 @@ def test_sql_int_typing(spark):
         sql_int(-(1 << 63) - 1)
 
 
+def _hyperplane_signature(vec, bits: int, seed_base: int = 0):
+    """The in-row hyperplane signature the literal route replaced (the
+    reference it is pinned against): hyperplane h's component for
+    dimension i is g(h, i) = ((xxhash64(h, i) % 1000003) / 1000003) −
+    0.5, evaluated per row; sig bit h = sign(Σ_i vec[i] * g(h, i))."""
+
+    def _weighted(h):
+        # closure factory: keeps the lambda 2-ary (pyspark infers arity)
+        def weighted(x, i):
+            u = (F.xxhash64(F.lit(h), i) % 1000003 + 1000003) % 1000003
+            return x * (u.cast("double") / 1000003.0 - 0.5)
+
+        return weighted
+
+    bit_cols = []
+    for h0 in range(bits):
+        h = seed_base + h0
+        proj = F.aggregate(
+            F.zip_with(vec, F.sequence(F.lit(0), F.size(vec) - 1), _weighted(h)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        bit_cols.append(
+            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), h0)).otherwise(
+                F.lit(0).cast("long")
+            )
+        )
+    sig = bit_cols[0]
+    for c in bit_cols[1:]:
+        sig = sig.bitwiseOR(c)
+    return sig
+
+
 def test_hyperplane_literal_probe_matches_in_row_signature(spark):
     """The r19 probe-then-literal LSH route must emit the SAME pair set
     as the in-row hyperplane expression form it replaced."""
@@ -128,7 +161,7 @@ def test_hyperplane_literal_probe_matches_in_row_signature(spark):
     sigs = [
         F.struct(
             F.lit(t).alias("tbl"),
-            S._hyperplane_signature(F.col("vec"), bits=4, seed_base=t * 4).alias(
+            _hyperplane_signature(F.col("vec"), bits=4, seed_base=t * 4).alias(
                 "sig"
             ),
         )

@@ -184,10 +184,9 @@ def test_portable_hash60_family_cross_engine(s, seed):
     h=st.integers(0, 7),
 )
 def test_portable_hyperplane_component_formula(vec, h):
-    """portable_hyperplane (the plan-literal path) must equal the
-    runtime formula (u % 1000003)/1000003 - 0.5 applied to hashlib
-    values — the exact expression the Spark and DuckDB runtime paths
-    evaluate."""
+    """portable_hyperplane (the plan-literal planes) must equal the
+    formula (u % 1000003)/1000003 - 0.5 applied to hashlib values —
+    the exact expression the DuckDB oracle evaluates per row."""
     from hive_scripts_spark.operators.similarity import portable_hyperplane
 
     plane = portable_hyperplane(h, len(vec))

@@ -89,6 +89,32 @@ def test_connected_components_long_path_converges(spark):
     assert set(comp.values()) == {0}
 
 
+def test_eager_local_checkpoint_publishes_observed_metrics(spark):
+    """The contract connected_components' convergence check rests on: an
+    eager localCheckpoint of an observed frame publishes the
+    Observation's metrics. ``Observation.get`` blocks until they arrive,
+    so if a Spark upgrade stops publishing them, this test fails within
+    its bounded join instead of hanging the suite."""
+    import threading
+
+    from pyspark.sql import Observation
+
+    obs = Observation("cc_contract")
+    spark.range(5).observe(obs, F.max("id").alias("hi")).localCheckpoint(
+        eager=True
+    )
+    got = {}
+    reader = threading.Thread(
+        target=lambda: got.update(obs.get), daemon=True
+    )
+    reader.start()
+    reader.join(timeout=60)
+    assert not reader.is_alive(), (
+        "Observation.get still blocked 60 s after an eager localCheckpoint"
+    )
+    assert got == {"hi": 4}
+
+
 def test_connected_components_raises_on_nonconvergence(spark):
     import pytest
 

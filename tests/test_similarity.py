@@ -94,11 +94,19 @@ def test_ivf_assign(vecs, spark):
     assert out[4] == 0
 
 
-def test_lsh_ragged_dimension_fails_loudly(spark):
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        lambda df: S.embedding_near_dup_pairs(df, 0.5, use_lsh=True),
+        lambda df: S.embedding_lsh_pairs_portable(df, threshold=0.5),
+    ],
+    ids=["xxhash64", "portable"],
+)
+def test_lsh_ragged_dimension_fails_loudly(spark, pairs):
     """ADVICE r19: the hyperplane literals pin the probe row's
     dimension — a ragged table must raise in-plan, not silently emit
-    zero signature bits for the mismatched rows."""
-    import pytest
+    zero signature bits for the mismatched rows. Both hyperplane
+    families run the one pipeline, so both carry the guard."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
@@ -107,7 +115,7 @@ def test_lsh_ragged_dimension_fails_loudly(spark):
         "vec_id long, embedding array<double>",
     )
     with pytest.raises((PySparkException, Py4JJavaError)) as exc:
-        S.embedding_near_dup_pairs(ragged, 0.5, use_lsh=True).collect()
+        pairs(ragged).collect()
     assert "ragged embedding dimension" in str(exc.value)
 
 
@@ -221,22 +229,6 @@ def test_lsh_portable_pairs_subset_of_exact_with_exact_sims(vecs):
     for k, v in portable.items():
         assert exact[k] == v
     assert (0, 1) in portable  # near-identical vectors collide in every table
-
-
-def test_lsh_portable_literal_planes_match_runtime_hash(vecs):
-    """dim-literal hyperplanes (plan literals) must reproduce the
-    runtime-md5 path bit-for-bit — same family, different evaluation."""
-    runtime = {
-        tuple(r)
-        for r in S.embedding_lsh_pairs_portable(vecs, threshold=0.5).collect()
-    }
-    literal = {
-        tuple(r)
-        for r in S.embedding_lsh_pairs_portable(
-            vecs, threshold=0.5, dim=4
-        ).collect()
-    }
-    assert literal == runtime
 
 
 def test_quantized_ivf_dequant_evaluated_once(spark):
