@@ -43,6 +43,18 @@ def _table_specs(config_text: str, cfg: JobConfig) -> list[TableSpec]:
     return [TableSpec(name, partition_cols=parts.get(name, [])) for name in cfg.tables]
 
 
+_SHOW_ROWS = 100
+
+
+def _show_verdict(df, n_rows: int, report_dir: str | None) -> None:
+    """Print a verdict table's first :data:`_SHOW_ROWS` rows and say so
+    when there are more."""
+    df.show(_SHOW_ROWS, truncate=False)
+    if n_rows > _SHOW_ROWS:
+        where = report_dir or "the CSV reports (pass --output)"
+        print(f"(first {_SHOW_ROWS} of {n_rows} rows; full list in {where})")
+
+
 def cmd_validate(args: argparse.Namespace) -> int:
     from pathlib import Path
 
@@ -77,14 +89,16 @@ def cmd_validate(args: argparse.Namespace) -> int:
         sample_mode=cfg.sample_mode,
         sample_rows=cfg.sample_size,
     )
+    # every frame below is local and pre-sorted: showing and counting
+    # it runs no Spark job
     print("== UC#1 count reconciliation ==")
-    result.reconciled.orderBy("table_name", "partition_spec").show(100, truncate=False)
+    _show_verdict(result.reconciled, len(result.reconciled_rows), result.report_dir)
     if result.consistency is not None:
         print("== UC#2 sampled-content consistency ==")
-        result.consistency.orderBy("table_name", "partition_spec").show(
-            100, truncate=False
+        _show_verdict(
+            result.consistency, len(result.consistency_rows), result.report_dir
         )
-    n_bad = result.mismatched.count()
+    n_bad = len(result.mismatched.collect())
     print(f"{'FAIL' if n_bad else 'OK'}: {n_bad} mismatched table/partition(s)")
     return 1 if n_bad else 0
 

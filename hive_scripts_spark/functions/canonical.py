@@ -77,6 +77,35 @@ def row_hash(df: DataFrame, cols: list[str] | None = None, portable: bool = True
     return F.abs(F.xxhash64(s))
 
 
+def fingerprint_lanes(h: Column) -> list[Column]:
+    """The per-row hash ``h`` split into three 20-bit bigint lanes
+    ``__p2, __p1, __p0`` (``h = p2·2^40 + p1·2^20 + p0``), to be summed
+    per group and recombined by :func:`lane_fingerprint`."""
+    lane_mask = F.lit((1 << 20) - 1)
+    return [
+        F.shiftright(h, 40).alias("__p2"),
+        F.shiftright(h, 20).bitwiseAND(lane_mask).alias("__p1"),
+        h.bitwiseAND(lane_mask).alias("__p0"),
+    ]
+
+
+def lane_fingerprint() -> Column:
+    """Aggregate over the columns of :func:`fingerprint_lanes`: the lane
+    sums recombined mod 2^61-1 in one ``decimal(38,0)`` expression per
+    group, as ``bigint``. NULL lanes (rows outside a sample) add nothing;
+    a group with no non-NULL lane gets a NULL fingerprint."""
+    mod = F.lit(FINGERPRINT_MOD).cast("decimal(38,0)")
+    dec = lambda c: F.sum(F.col(c)).cast("decimal(38,0)")  # noqa: E731
+    return (
+        (
+            dec("__p2") * F.lit(1 << 40).cast("decimal(38,0)")
+            + dec("__p1") * F.lit(1 << 20).cast("decimal(38,0)")
+            + dec("__p0")
+        )
+        % mod
+    ).cast("bigint")
+
+
 def table_fingerprint(
     df: DataFrame,
     cols: list[str] | None = None,
@@ -105,30 +134,27 @@ def table_fingerprint(
     """
     df = ensure_parallelism(df, parallelism)
     h = row_hash(df, cols, portable=portable)
-    lane_mask = F.lit((1 << 20) - 1)
-    projected = df.select(
-        *(group_by or []),
-        F.shiftright(h, 40).alias("__p2"),
-        F.shiftright(h, 20).bitwiseAND(lane_mask).alias("__p1"),
-        h.bitwiseAND(lane_mask).alias("__p0"),
-    )
-    mod = F.lit(FINGERPRINT_MOD).cast("decimal(38,0)")
-    dec = lambda c: F.sum(F.col(c)).cast("decimal(38,0)")  # noqa: E731
-    fingerprint = (
-        (
-            dec("__p2") * F.lit(1 << 40).cast("decimal(38,0)")
-            + dec("__p1") * F.lit(1 << 20).cast("decimal(38,0)")
-            + dec("__p0")
-        )
-        % mod
-    ).cast("bigint")
+    projected = df.select(*(group_by or []), *fingerprint_lanes(h))
     aggs = [
-        fingerprint.alias("fingerprint"),
+        lane_fingerprint().alias("fingerprint"),
         F.count(F.lit(1)).alias("row_count"),
     ]
     if group_by:
         return projected.groupBy(*group_by).agg(*aggs)
     return projected.agg(*aggs)
+
+
+def in_hash_sample(
+    key_cols: list[str], fraction: float = 0.10, buckets: int = 1000
+) -> Column:
+    """The predicate of :func:`deterministic_sample`:
+    ``md5(key) % buckets < fraction * buckets`` over the ``\\x01``-joined
+    key columns."""
+    key = F.concat_ws(FIELD_SEP, *[F.col(c).cast("string") for c in key_cols])
+    # 15 hex chars < 2^60 — bigint arithmetic (a decimal(38,0) modulo here
+    # costs ~2.5x: per-row BigDecimal allocation outside codegen long math)
+    bucket = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint") % buckets
+    return bucket < int(fraction * buckets)
 
 
 def deterministic_sample(
@@ -149,11 +175,7 @@ def deterministic_sample(
     Scale note: this is a narrow-dependency filter — no shuffle, pushes
     into the scan's post-filter, and samples every partition uniformly.
     """
-    key = F.concat_ws(FIELD_SEP, *[F.col(c).cast("string") for c in key_cols])
-    # 15 hex chars < 2^60 — bigint arithmetic (a decimal(38,0) modulo here
-    # costs ~2.5x: per-row BigDecimal allocation outside codegen long math)
-    bucket = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint") % buckets
-    return df.where(bucket < int(fraction * buckets))
+    return df.where(in_hash_sample(key_cols, fraction, buckets))
 
 
 def weighted_sample(

@@ -20,9 +20,14 @@ from pyspark.sql import functions as F
 
 from hive_scripts_spark.functions.canonical import (
     deterministic_sample,
+    fingerprint_lanes,
+    in_hash_sample,
+    lane_fingerprint,
     limit_sample,
+    row_hash,
     table_fingerprint,
 )
+from hive_scripts_spark.sources.partitions import partition_spec_col
 
 
 def sampled_fingerprint(
@@ -57,16 +62,9 @@ def sampled_fingerprint(
     if partition_cols:
         spec_cols = partition_cols
         fp = table_fingerprint(sample, hash_cols or df.columns, group_by=spec_cols)
-        spec = F.concat_ws(
-            "/",
-            *[
-                F.concat_ws("=", F.lit(c), F.col(c).cast("string"))
-                for c in partition_cols
-            ],
-        )
         fp = fp.select(
             F.lit(table_name).alias("table_name"),
-            spec.alias("partition_spec"),
+            partition_spec_col(partition_cols).alias("partition_spec"),
             "fingerprint",
             "row_count",
         )
@@ -78,6 +76,62 @@ def sampled_fingerprint(
             "row_count",
         )
     return fp
+
+
+def counts_and_sampled_fingerprint(
+    df: DataFrame,
+    key_cols: list[str],
+    table_name: str = "",
+    partition_cols: list[str] | None = None,
+    fraction: float = 0.10,
+) -> DataFrame:
+    """UC#1 and hash-mode UC#2 of one table side in ONE grouped
+    aggregate over one scan: ``table_name, partition_spec, row_count,
+    fingerprint, sample_rows``.
+
+    ``row_count`` is :func:`~hive_scripts_spark.operators.reconcile.
+    partition_counts`' count of every row; ``fingerprint`` and
+    ``sample_rows`` are :func:`sampled_fingerprint`'s (``mode='hash'``)
+    fingerprint and row count of the :func:`~hive_scripts_spark.
+    functions.canonical.deterministic_sample` rows, summed over the
+    sampled rows only: the row hash is projected as NULL outside the
+    sample, so the lanes of unsampled rows add nothing and are never
+    hashed. The hash is staged in its own projection, bound once
+    (PLANS.md trap #1), before the lanes read it three times.
+
+    Unlike :func:`sampled_fingerprint` this keeps a row for a partition
+    whose sample is empty (``sample_rows == 0``, NULL fingerprint); a
+    caller that wants the sampled-fingerprint frame drops those rows on
+    partitioned tables. Unpartitioned, it is one global row with a NULL
+    ``partition_spec`` even when the sample is empty, as
+    ``partition_counts`` and :func:`sampled_fingerprint` each give one.
+    """
+    h = F.when(in_hash_sample(key_cols, fraction), row_hash(df, df.columns))
+    group = (
+        [partition_spec_col(partition_cols).alias("partition_spec")]
+        if partition_cols
+        else []
+    )
+    staged = df.select(*group, h.alias("__h"))
+    lanes = staged.select(*staged.columns, *fingerprint_lanes(F.col("__h")))
+    aggs = [
+        F.count(F.lit(1)).alias("row_count"),
+        lane_fingerprint().alias("fingerprint"),
+        F.count("__h").alias("sample_rows"),
+    ]
+    if partition_cols:
+        out = lanes.groupBy("partition_spec").agg(*aggs)
+    else:
+        out = lanes.agg(*aggs).withColumn(
+            "partition_spec", F.lit(None).cast("string")
+        )
+    return out.select(
+        F.lit(table_name).alias("table_name"),
+        "partition_spec",
+        "row_count",
+        "fingerprint",
+        "sample_rows",
+    )
 
 
 def fingerprint_reconcile(src_fp: DataFrame, tgt_fp: DataFrame) -> DataFrame:

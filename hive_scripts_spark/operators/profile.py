@@ -16,6 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from hive_scripts_spark.sources.readers import local_frame
 
 
 def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -86,6 +89,11 @@ def profile_drift(
     )
 
 
+_SCHEMA_DIFF = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ("column", "src_type", "tgt_type", "status")]
+)
+
+
 def schema_diff(src: DataFrame, tgt: DataFrame) -> DataFrame:
     """Column-level schema comparison of two sides of the same logical
     table: ``(column, src_type, tgt_type, status)`` with status ∈
@@ -94,10 +102,10 @@ def schema_diff(src: DataFrame, tgt: DataFrame) -> DataFrame:
     Pure metadata (``df.schema`` on the driver — no jobs, no scans): the
     pre-check a validator runs BEFORE counting/fingerprinting, since a
     drifted schema makes row-level comparison meaningless. The result is
-    a tiny DataFrame so it composes with the report sinks like every
-    other validation frame.
+    a tiny local frame (:func:`~hive_scripts_spark.sources.readers.
+    local_frame`) so it composes with the report sinks like every other
+    validation frame.
     """
-    spark = src.sparkSession
     s = {f.name: f.dataType.simpleString() for f in src.schema.fields}
     t = {f.name: f.dataType.simpleString() for f in tgt.schema.fields}
     rows = []
@@ -112,6 +120,4 @@ def schema_diff(src: DataFrame, tgt: DataFrame) -> DataFrame:
         else:
             status = "ok"
         rows.append((name, st, tt, status))
-    return spark.createDataFrame(
-        rows, "column string, src_type string, tgt_type string, status string"
-    )
+    return local_frame(src.sparkSession, _SCHEMA_DIFF, rows)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hive_scripts_spark.sources.partitions import partition_spec_col
+
 #: column names of the count-record frame — mirrors the reference's
 #: colon-delimited intermediate schema ``(table, count, partition)``
 #: (``verizon_automation_script.sh:120,154``; SURVEY §2.1).
@@ -45,15 +47,8 @@ def partition_counts(
     §2.8.5).
     """
     if partition_cols:
-        spec = F.concat_ws(
-            "/",
-            *[
-                F.concat_ws("=", F.lit(c), F.col(c).cast("string"))
-                for c in partition_cols
-            ],
-        )
         out = (
-            df.groupBy(spec.alias("partition_spec"))
+            df.groupBy(partition_spec_col(partition_cols).alias("partition_spec"))
             .agg(F.count(F.lit(1)).alias("row_count"))
         )
     else:

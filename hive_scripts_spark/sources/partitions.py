@@ -16,7 +16,7 @@ single-``key=value`` assumption (``cut -d= -f1,2``,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -36,9 +36,17 @@ def partition_spec_string(df: DataFrame, partition_cols: list[str]) -> DataFrame
     """Render partition tuples as Hive ``k1=v1/k2=v2`` spec strings — the
     format ``SHOW PARTITIONS`` emits and the reference parses
     (``verizon_automation_script.sh:111-116``)."""
-    parts = [
-        F.concat_ws("=", F.lit(c), F.col(c).cast("string")) for c in partition_cols
-    ]
     return partition_values(df, partition_cols).select(
-        F.concat_ws("/", *parts).alias("partition_spec")
+        partition_spec_col(partition_cols).alias("partition_spec")
+    )
+
+
+def partition_spec_col(partition_cols: list[str]) -> Column:
+    """The Hive ``k1=v1/k2=v2`` spec of a row's partition columns: the
+    one definition behind every frame keyed on ``partition_spec`` (UC#1
+    counts, UC#2 fingerprints, the validation pipeline's fused
+    aggregate)."""
+    return F.concat_ws(
+        "/",
+        *[F.concat_ws("=", F.lit(c), F.col(c).cast("string")) for c in partition_cols],
     )

@@ -121,6 +121,31 @@ def reformat_delimited(df: DataFrame, joiner: str = " ") -> DataFrame:
     return df.select(F.concat_ws(joiner, *df.columns).alias("line"))
 
 
+def local_frame(
+    spark: SparkSession, schema: _t.StructType, rows: list[tuple]
+) -> DataFrame:
+    """Rows already on the driver (tuples or ``Row`` objects in ``schema``'s
+    field order) as a frame over a JVM ``LocalRelation``, built through
+    an Arrow table of ``schema``'s exact types.
+
+    Filters, projections and limits over it fold into the relation, so
+    ``show``/``collect`` on them run no Spark job. The other ways to
+    build it are slower or lossy: ``createDataFrame(list)`` takes the
+    Python-RDD path (a 12-row CSV report write: ~0.85 s against ~0.15 s
+    from Arrow, warm ``local[4]`` session on a 4-core host), and a pandas
+    frame turns an int column with a NULL into float64, rounding 61-bit
+    fingerprints above 2^53.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table)
+
+
 def load_table(
     spark: SparkSession, db: str, name: str, csv_schema: str | None = None
 ) -> DataFrame:

@@ -5,17 +5,26 @@ must have the same row count (non-zero at both scales, bar the few
 listed in ``EMPTY_AT_SF0001``), the same column names and the same
 order-insensitive rows (the rendering
 :func:`~hive_scripts_spark.plans.oracle_helpers.frame_digest` hashes;
-``tools/parity.py`` is the CLI over the same helpers). Every query,
-oracled or rows-only, must also emit flat scalar columns: list, map and
-struct cells cannot be hashed by a row-value canonicalizer.
+``tools/parity.py`` is the CLI over the same helpers). A rows-only query
+(no oracle) must match its sf0.001 digest pinned in
+``golden/rows_only_sf0.001.json``. Every query, oracled or rows-only,
+must also emit flat scalar columns: list, map and struct cells cannot be
+hashed by a row-value canonicalizer.
 """
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from hive_scripts_spark.plans.oracle_helpers import canonical_lines, duck_views
+from hive_scripts_spark.plans.oracle_helpers import (
+    canonical_lines,
+    duck_views,
+    frame_digest,
+)
 from hive_scripts_spark.plans.registry import ORACLES, QUERIES
 
 SCALES = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
@@ -25,7 +34,11 @@ SCALES = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 # query must return rows at both scales
 EMPTY_AT_SF0001 = frozenset({"g_q7_volume_shipping"})
 
-# a rows-only query has nothing to compare, so it is built at one scale
+# a rows-only query has no oracle to compare with, so it is checked at
+# one scale, against its pinned digest
+ROWS_ONLY_DIGESTS = json.loads(
+    (Path(__file__).parent / "golden" / "rows_only_sf0.001.json").read_text()
+)["digests"]
 CASES = [
     (name, sf_dir)
     for sf_dir in SCALES
@@ -55,9 +68,10 @@ def test_query_matches_oracle(spark, duck, name, sf_dir):
         if isinstance(f.dataType, (ArrayType, MapType, StructType))
     ]
     assert not nested, f"nested output columns: {nested}"
-    if name not in ORACLES:
-        return
     rows = [tuple(r) for r in got.collect()]
+    if name not in ORACLES:
+        assert frame_digest(got.columns, rows) == ROWS_ONLY_DIGESTS[name]
+        return
     rel = duck[sf_dir].execute(ORACLES[name])
     duck_cols = [d[0] for d in rel.description]
     duck_rows = rel.fetchall()

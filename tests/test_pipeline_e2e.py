@@ -61,21 +61,37 @@ def dbs(spark, tmp_path_factory):
     return src_dir, tgt_dir
 
 
-def test_full_validation(dbs, spark, tmp_path):
+ALL_SPECS = [
+    TableSpec("emp", partition_cols=["dept_id"], key_cols=["emp_id"]),
+    TableSpec("dept"),
+    TableSpec("salary", partition_cols=["month"], key_cols=["emp_id", "month"]),
+    TableSpec("marks", partition_cols=["term"], key_cols=["student_id"]),
+]
+# (table, partition) keys of the fixture: emp 5, dept 1, salary 4, marks 3
+N_KEYS = 13
+# run_validation's Spark jobs on the fixture: 8 parquet schema reads (one
+# per table side), 9 for the one aggregate collect (a shuffle-map job per
+# table side, then the ordered take), 10 for the reconciled and
+# consistency collects over local frames, 4 report writes.
+PIPELINE_JOBS = 31
+
+
+def _config(dbs) -> JobConfig:
     src_dir, tgt_dir = dbs
-    cfg = JobConfig(
-        source=EndpointConfig(db_name="source", path=src_dir),
-        target=EndpointConfig(db_name="target", path=tgt_dir),
-        tables=["emp", "dept", "salary", "marks"],
+    return JobConfig(
+        source=EndpointConfig(path=src_dir),
+        target=EndpointConfig(path=tgt_dir),
+        tables=[s.name for s in ALL_SPECS],
     )
-    specs = [
-        TableSpec("emp", partition_cols=["dept_id"], key_cols=["emp_id"]),
-        TableSpec("dept"),
-        TableSpec("salary", partition_cols=["month"], key_cols=["emp_id", "month"]),
-        TableSpec("marks", partition_cols=["term"], key_cols=["student_id"]),
-    ]
+
+
+def test_full_validation(dbs, spark, tmp_path):
     result = run_validation(
-        spark, cfg, specs, output_dir=str(tmp_path / "out"), sample_fraction=1.0
+        spark,
+        _config(dbs),
+        ALL_SPECS,
+        output_dir=str(tmp_path / "out"),
+        sample_fraction=1.0,
     )
 
     # UC#1: exactly emp/dept_id=2 mismatches
@@ -162,3 +178,116 @@ def test_schema_drift_precheck_clean_and_dirty(dbs, spark, tmp_path):
     res2 = run_validation(spark, cfg2, [TableSpec("dept")])
     drift = {(r["column"], r["status"]) for r in res2.schema_drift.collect()}
     assert drift == {("location", "type_mismatch")}
+
+
+# --- one scan per side, each verdict computed once --------------------------
+
+@pytest.mark.parametrize("fraction", [0.1, 1.0])
+@pytest.mark.parametrize("partition_cols", [["p"], []], ids=["partitioned", "global"])
+def test_fused_aggregate_equals_the_two_scans(spark, fraction, partition_cols):
+    """The one-scan aggregate gives partition_counts' counts and
+    sampled_fingerprint's fingerprints and sample sizes, per partition;
+    a partition whose sample is empty has sample_rows 0 and no
+    sampled_fingerprint row."""
+    from hive_scripts_spark.operators.fingerprint import (
+        counts_and_sampled_fingerprint,
+        sampled_fingerprint,
+    )
+    from hive_scripts_spark.operators.reconcile import partition_counts
+
+    # 2 rows per partition: at fraction 0.1 most partitions sample nothing
+    df = spark.range(60).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 30).cast("int").alias("p"),
+        (F.col("id") * 1.5).alias("v"),
+    )
+    fused = {
+        (r["table_name"], r["partition_spec"]): r
+        for r in counts_and_sampled_fingerprint(
+            df, ["k"], "t", partition_cols, fraction
+        ).collect()
+    }
+    counts = {
+        (r["table_name"], r["partition_spec"]): r["row_count"]
+        for r in partition_counts(df, partition_cols, "t").collect()
+    }
+    fps = {
+        (r["table_name"], r["partition_spec"]): (r["fingerprint"], r["row_count"])
+        for r in sampled_fingerprint(
+            df, ["k"], "t", partition_cols, fraction
+        ).collect()
+    }
+    assert {k: r["row_count"] for k, r in fused.items()} == counts
+    assert {
+        k: (r["fingerprint"], r["sample_rows"])
+        for k, r in fused.items()
+        if r["sample_rows"] > 0 or not partition_cols
+    } == fps
+    sizes = [r["sample_rows"] for r in fused.values()]
+    if partition_cols and fraction < 1:
+        assert 0 in sizes and max(sizes) > 0  # both cases exercised
+    if fraction == 1.0:
+        assert sizes == [r["row_count"] for r in fused.values()]
+
+
+def test_empty_samples_keep_the_uc2_edge_semantics(dbs, spark):
+    """With nothing sampled, a partitioned table gets no UC#2 row and an
+    unpartitioned one still gets exactly one (NULL fingerprints, both
+    sides empty: consistent)."""
+    result = run_validation(spark, _config(dbs), ALL_SPECS, sample_fraction=0.0)
+    assert [tuple(r) for r in result.consistency_rows] == [
+        ("dept", None, None, None, "consistent")
+    ]
+    assert {r["table_name"] for r in result.mismatched.collect()} == {"emp"}
+
+
+def test_verdict_bound_raises_a_typed_error(dbs, spark, monkeypatch):
+    from hive_scripts_spark import pipeline
+
+    # at the bound every collect fits: 2 x 13 aggregate rows, 13 verdicts
+    monkeypatch.setattr(pipeline, "VERDICT_ROW_BOUND", N_KEYS)
+    ok = run_validation(spark, _config(dbs), ALL_SPECS, sample_fraction=1.0)
+    assert len(ok.reconciled_rows) == N_KEYS
+    monkeypatch.setattr(pipeline, "VERDICT_ROW_BOUND", N_KEYS - 1)
+    with pytest.raises(pipeline.VerdictTooLargeError, match="more than 24 rows"):
+        run_validation(spark, _config(dbs), ALL_SPECS, sample_fraction=1.0)
+
+
+def test_validate_cli_job_budget(dbs, spark, tmp_path, monkeypatch, capsys):
+    """``run_validation`` scans each table side once and collects each
+    verdict once; the CLI's tables and exit code then read local frames
+    and run no Spark job. Pinned with statusTracker job groups."""
+    import hive_scripts_spark.__main__ as cli
+
+    src_dir, tgt_dir = dbs
+    cfg = tmp_path / "validate.ini"
+    cfg.write_text(
+        f"[Source]\nPath:{src_dir}\n[Target]\nPath:{tgt_dir}\n"
+        "[Tables]\nemp\ndept\nsalary\nmarks\n"
+        "[Partitions]\nemp:dept_id\nsalary:month\nmarks:term\n"
+        "[SampleDataPercentage]\n100\n"
+    )
+    sc = spark.sparkContext
+    real = cli.run_validation
+
+    def grouped(*args, **kwargs):
+        sc.setJobGroup("validate-pipeline", "run_validation")
+        try:
+            return real(*args, **kwargs)
+        finally:
+            sc.setJobGroup("validate-cli", "show and exit code")
+
+    monkeypatch.setattr(cli, "run_validation", grouped)
+    monkeypatch.setattr(cli, "_SHOW_ROWS", 5)
+    try:
+        rc = cli.main(["validate", str(cfg), "--output", str(tmp_path / "out")])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    out = capsys.readouterr().out
+    tracker = sc.statusTracker()
+    assert rc == 1 and "FAIL: 1 mismatched" in out
+    assert len(tracker.getJobIdsForGroup("validate-cli")) == 0
+    assert len(tracker.getJobIdsForGroup("validate-pipeline")) == PIPELINE_JOBS
+    (run_dir,) = (tmp_path / "out").iterdir()
+    assert f"(first 5 of {N_KEYS} rows; full list in {run_dir})" in out
+    assert f"(first 5 of {N_KEYS - 1} rows; full list in {run_dir})" in out

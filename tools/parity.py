@@ -1,7 +1,9 @@
 """Run every query in ``queries()`` against its ``oracle_sql()`` twin on
 DuckDB and compare row count, column names, and an order-insensitive
 value hash (:func:`~hive_scripts_spark.plans.oracle_helpers.frame_digest`,
-the same check as ``tests/test_parity.py``).
+the same check as ``tests/test_parity.py``). Every query's digest is
+printed, the rows-only (oracle-less) ones too: their sf0.001 digests are
+the values pinned in ``tests/golden/rows_only_sf0.001.json``.
 
 Usage: python tools/parity.py [sf_dir] [query ...]
 
@@ -71,8 +73,9 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {type(ex).__name__}: {ex}")
             continue
+        digest = frame_digest(scols, srows)
         if name not in oracles:
-            print(f"ok?   {name}: rows-only ({len(srows)} rows) — no oracle")
+            print(f"ok?   {name}: rows-only ({len(srows)} rows) {digest} — no oracle")
             continue
         try:
             res = con.execute(oracles[name])
@@ -83,7 +86,6 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {type(ex).__name__}: {ex}")
             continue
         problems = []
-        digest = frame_digest(scols, srows)
         if len(srows) != len(drows):
             problems.append(f"rows {len(srows)} vs {len(drows)}")
         if sorted(scols) != sorted(dcols):
