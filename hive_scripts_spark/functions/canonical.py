@@ -376,8 +376,8 @@ def rank_trim(
     # curation domains (|groups| small); ONLY for group-by-user shapes
     # with millions of groups — where the stats frame itself is too
     # big to broadcast — pass broadcast_stats=False and take the
-    # shuffle joins (results identical either way; NO_BHJ soak pins
-    # strategy-independence).
+    # shuffle joins (results identical either way; test_parity.py's
+    # no-broadcast pass pins strategy-independence).
     hint = F.broadcast if broadcast_stats else (lambda d: d)
     if cast_monotone:
         val = F.col(value_col).cast("double")

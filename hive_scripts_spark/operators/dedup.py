@@ -815,7 +815,7 @@ def _band_candidates(banded: DataFrame) -> DataFrame:
 
     NO explicit repartition before the self-join (r20, reverting the
     r19 "shared shuffle AQE reuses" bet — VERDICT r19 item 1): the
-    runtime A/B (tools/minhash_ab_r20.py; plans/r20/minhash_ab_*)
+    runtime A/B (OPTIMIZATION_r20.md §1; plans/r20/minhash_ab_*)
     measured the repartitioned form SLOWER at sf0.1 (best 1.375 vs
     1.138 s) AND at a 50k-doc synthetic 10× (2.426 vs 2.421 s, 14 vs
     9 exchanges), because at broadcastable sizes AQE picks a BHJ for
@@ -916,9 +916,9 @@ def _verify_pairs_jaccard(
     pairs onto one scan of ``sets`` and reassembled both arrays with a
     pair-keyed groupBy, on the theory that evaluating the
     tokenize→shingle lineage once instead of twice must win. The
-    same-session A/B (``tools/verify_ab.py``) falsified it at every
-    size: equal at 5k docs (0.52 vs 0.47 s) and 20k (0.75 vs 0.63 s),
-    and **3.7× slower at 80k docs / 665k candidates** (16.0 vs 4.4 s)
+    same-session A/B (PLANS.md, ``x_dedup_minhash_lsh`` row) falsified
+    it at every size: equal at 5k docs (0.52 vs 0.47 s) and 20k (0.75
+    vs 0.63 s), and **3.7× slower at 80k docs / 665k candidates** (16.0 vs 4.4 s)
     — the melt's extra pair-keyed exchange ships a shingle-array copy
     per (pair, side) row, which is exactly the O(candidates × array)
     traffic the theory ignored, while the two-join form lets AQE
@@ -1180,7 +1180,7 @@ def simhash_near_pairs(
     # predates the parallelism pre-repartition (whose round-robin
     # exchange is now the ReusedExchange both branches read) and the
     # re-measured trade flipped — the r20 alternating A/B
-    # (tools/selfjoin_repartition_ab_r20.py,
+    # (OPTIMIZATION_r20.md §5,
     # plans/r20/selfjoin_simhash_{on,off}_final.txt) reads off FASTER:
     # best 0.92 vs 1.99 s over 5 reps, and 0.868 vs 1.180 s on the
     # quietest alternating pair (9 vs 12 exchanges). At broadcastable
@@ -1302,11 +1302,11 @@ def bloom_contamination_overlap(
       ONE-ROW broadcast relation (a 1-row BroadcastNestedLoopJoin —
       constant per executor, never parsed as SQL text); the exact
       verify joins the DISTRIBUTED bench-gram frame (AQE picks
-      broadcast vs shuffle). Measured (tools/scale_probe.py, 100k-doc
-      corpus, disjoint bench sets): the literal route's driver work
-      (the gram collect + multi-MB plan text + gram LocalRelation, all
-      growing with the BENCH) is a scale-killer the distributed route
-      removes entirely — 17.9 s vs 2.0 s at a 10k-doc bench.
+      broadcast vs shuffle). Measured (PLANS.md, ``x_decontaminate_bloom``
+      row; 100k-doc corpus, disjoint bench sets): the literal route's
+      driver work (the gram collect + multi-MB plan text + gram
+      LocalRelation, all growing with the BENCH) is a scale-killer the
+      distributed route removes entirely — 17.9 s vs 2.0 s at a 10k-doc bench.
 
     Literal-route shape: ONE tiny Spark job over the small side
     collects the bench grams with their k raw xxhash64 values; the

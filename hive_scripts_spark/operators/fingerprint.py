@@ -9,7 +9,7 @@ Spark-native design (SURVEY §3.2): deterministic hash-mod sampling (both
 sides pick the *same* logical rows — ``LIMIT`` without ``ORDER BY`` cannot)
 → canonical row serialization → order-insensitive modular-sum fingerprint
 (:mod:`hive_scripts_spark.functions.canonical`) → one tiny frame per side →
-broadcast join + equality filter. No local-FS round trip, no
+union + one grouped alignment + equality filter. No local-FS round trip, no
 first-file-only bug (SURVEY §2.8.3), immune to row order (§2.8.2).
 """
 
@@ -27,6 +27,7 @@ from hive_scripts_spark.functions.canonical import (
     row_hash,
     table_fingerprint,
 )
+from hive_scripts_spark.operators.reconcile import align_sides
 from hive_scripts_spark.sources.partitions import partition_spec_col
 
 
@@ -139,38 +140,16 @@ def fingerprint_reconcile(src_fp: DataFrame, tgt_fp: DataFrame) -> DataFrame:
 
     ``status`` is ``consistent`` when both fingerprint and sampled row
     count agree, else ``inconsistent`` (→ the TableDataNotConsistent
-    report, ``verizon_automation_script.sh:251-255``).
+    report, ``verizon_automation_script.sh:251-255``). Both inputs have
+    one row per key (``groupBy`` outputs), aligned by
+    :func:`~hive_scripts_spark.operators.reconcile.align_sides`, so one
+    frame may stand on both sides.
     """
-    src = src_fp.select(
-        "table_name",
-        "partition_spec",
-        F.col("fingerprint").alias("src_fingerprint"),
-        F.col("row_count").alias("src_rows"),
-    )
-    tgt = tgt_fp.select(
-        "table_name",
-        "partition_spec",
-        F.col("fingerprint").alias("tgt_fingerprint"),
-        F.col("row_count").alias("tgt_rows"),
-    )
-    # null-safe on partition_spec (unpartitioned tables carry NULL specs)
-    cond = (src["table_name"] == tgt["table_name"]) & src["partition_spec"].eqNullSafe(
-        tgt["partition_spec"]
-    )
-    joined = src.join(F.broadcast(tgt), cond, "full_outer").select(
-        F.coalesce(src["table_name"], tgt["table_name"]).alias("table_name"),
-        F.coalesce(src["partition_spec"], tgt["partition_spec"]).alias(
-            "partition_spec"
-        ),
-        "src_fingerprint",
-        "tgt_fingerprint",
-        "src_rows",
-        "tgt_rows",
-    )
+    joined = align_sides(src_fp, tgt_fp, fingerprint="fingerprint", rows="row_count")
     # Null-safe: an empty sample on both sides yields fingerprint=NULL on
-    # both, and NULL==NULL would fall through to 'inconsistent'. A side
-    # missing entirely (one-sided NULL from the full outer) still compares
-    # unequal under eqNullSafe, so it stays 'inconsistent'.
+    # both, and NULL==NULL would fall through to 'inconsistent'. A present
+    # side's row count is never NULL, so a side missing entirely still
+    # compares unequal under eqNullSafe and stays 'inconsistent'.
     ok = F.col("src_fingerprint").eqNullSafe(F.col("tgt_fingerprint")) & F.col(
         "src_rows"
     ).eqNullSafe(F.col("tgt_rows"))

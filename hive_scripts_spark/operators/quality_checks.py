@@ -41,9 +41,9 @@ left join against the DISTINCT reference keys whose agg yields both
 n_checked and the orphan count in the same pass (an anti-join for
 violations plus a separate count would scan the table twice;
 broadcastable when the dimension is small, shuffle-join otherwise —
-correctness never depends on the broadcast, per the repo's NO_BHJ
-soak). At 100 TB: one scan + (number of unique/FK rules) keyed
-exchanges, report output is O(rules) rows.
+correctness never depends on the broadcast, per the no-broadcast
+pass of tests/test_parity.py). At 100 TB: one scan + (number of
+unique/FK rules) keyed exchanges, report output is O(rules) rows.
 """
 
 from __future__ import annotations

@@ -60,6 +60,47 @@ def partition_counts(
     )
 
 
+def align_sides(src: DataFrame, tgt: DataFrame, **cols: str) -> DataFrame:
+    """Full-outer alignment of two frames on ``(table_name,
+    partition_spec)`` as a union + one grouped aggregation.
+
+    Each ``out=col`` keyword gives the result a ``src_<out>`` and a
+    ``tgt_<out>`` column: that side's ``col``, or NULL where the side has
+    no row for the key. **Contract**: each input has at most one row per
+    key (a ``groupBy`` output), so ``max`` over a key's ≤ 2 rows only
+    collapses each side's value with the other side's NULL slot.
+    Grouping treats NULL keys as equal, so an unpartitioned table's NULL
+    ``partition_spec`` aligns without ``eqNullSafe`` join keys. One
+    exchange and no self-join, where a full-outer join (which cannot
+    broadcast) needs a sort-merge join over two.
+    """
+
+    def slots(df: DataFrame, own: str) -> DataFrame:
+        return df.select(
+            "table_name",
+            "partition_spec",
+            *(
+                (F.col(col) if side == own else F.lit(None).cast(df.schema[col].dataType))
+                .alias(f"{side}_{out}")
+                for out, col in cols.items()
+                for side in ("src", "tgt")
+            ),
+        )
+
+    return (
+        slots(src, "src")
+        .unionByName(slots(tgt, "tgt"))
+        .groupBy("table_name", "partition_spec")
+        .agg(
+            *(
+                F.max(f"{side}_{out}").alias(f"{side}_{out}")
+                for out in cols
+                for side in ("src", "tgt")
+            )
+        )
+    )
+
+
 def count_reconcile(source_counts: DataFrame, target_counts: DataFrame) -> DataFrame:
     """J1+J2: full-outer alignment on ``(table_name, partition_spec)``.
 
@@ -75,40 +116,11 @@ def count_reconcile(source_counts: DataFrame, target_counts: DataFrame) -> DataF
     ``(table_name, partition_spec)`` key, which every producer in this
     codebase guarantees by construction (:func:`partition_counts` and
     the manifest/streaming twins are all ``groupBy`` outputs). That
-    uniqueness is what lets the full-outer alignment run as a
-    **union + one grouped aggregation** instead of a join (r19): each
-    side contributes its count in its own slot, ``max`` collapses the
-    ≤ 2 rows per key, and a side with no row leaves a NULL — exactly
-    the full-outer result. Grouping treats NULL keys as equal, so the
-    unpartitioned branch's NULL ``partition_spec`` aligns without the
-    old form's ``eqNullSafe`` join keys. One exchange instead of the
-    sort-merge join's two sorted ones (full-outer cannot broadcast);
-    same O(tables × partitions) rows at any scale.
+    uniqueness is what lets the alignment run as :func:`align_sides`'
+    union + one grouped aggregation instead of a join (r19): one
+    exchange, same O(tables × partitions) rows at any scale.
     """
-    src = source_counts.select(
-        "table_name",
-        "partition_spec",
-        F.col("row_count").alias("src_count"),
-        F.lit(None).cast(source_counts.schema["row_count"].dataType).alias(
-            "tgt_count"
-        ),
-    )
-    tgt = target_counts.select(
-        "table_name",
-        "partition_spec",
-        F.lit(None).cast(target_counts.schema["row_count"].dataType).alias(
-            "src_count"
-        ),
-        F.col("row_count").alias("tgt_count"),
-    )
-    joined = (
-        src.unionByName(tgt)
-        .groupBy("table_name", "partition_spec")
-        .agg(
-            F.max("src_count").alias("src_count"),
-            F.max("tgt_count").alias("tgt_count"),
-        )
-    )
+    joined = align_sides(source_counts, target_counts, count="row_count")
     status = (
         F.when(F.col("src_count").isNull(), F.lit("target_only"))
         .when(F.col("tgt_count").isNull(), F.lit("source_only"))

@@ -169,8 +169,8 @@ def run_validation(
     schema_drift = _union_all(drift_frames)
 
     # the only scans: every table side's aggregate, in one action; each
-    # side becomes its own local frame (two relations, so the sides can
-    # be joined without a self-join's ambiguous columns)
+    # side becomes its own local frame, and count_reconcile /
+    # fingerprint_reconcile align the two with a union + one groupBy
     agg_df = _union_all(side_aggs)
     agg_rows = _collect_bounded(
         agg_df,

@@ -4125,7 +4125,7 @@ def x_decontaminate_bloom(spark, sf_dir):
     # route pinned: the bench here is known-small, and auto's sizing
     # count job is exactly the bench-side job overhead the r7 A/B
     # showed costing ~10x at sf0.1 (the distributed route exists for
-    # eval sets too big to collect — see tools/scale_probe.py)
+    # eval sets too big to collect — PLANS.md, x_decontaminate_bloom row)
     return D.bloom_contamination_overlap(corpus, bench, route="literal")
 
 

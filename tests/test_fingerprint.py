@@ -132,3 +132,22 @@ def test_weighted_sample_probability_and_determinism(spark):
     a = {r["doc_id"] for r in kept.collect()}
     b = {r["doc_id"] for r in weighted_sample(df, ["doc_id"], "w").collect()}
     assert a == b
+
+
+def test_fingerprint_reconcile_aligns_without_a_join(spark):
+    # both inputs are one-row-per-key frames, so the alignment is a union
+    # + one groupBy: one exchange, no sort-merge join, and one frame may
+    # stand on both sides (a self-join would be ambiguous)
+    import re
+
+    x = spark.createDataFrame(
+        [("t", f"p={i}", 1000 + i, 10 + i) for i in range(12)],
+        "table_name string, partition_spec string, fingerprint long, row_count long",
+    )
+    rec = fingerprint_reconcile(x, x)
+    rows = rec.collect()
+    assert len(rows) == 12 and {r["status"] for r in rows} == {"consistent"}
+    plan = rec._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"(?<!Reused)Exchange ", final)) == 1
+    assert "SortMergeJoin" not in plan

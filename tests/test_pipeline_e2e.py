@@ -71,9 +71,10 @@ ALL_SPECS = [
 N_KEYS = 13
 # run_validation's Spark jobs on the fixture: 8 parquet schema reads (one
 # per table side), 9 for the one aggregate collect (a shuffle-map job per
-# table side, then the ordered take), 10 for the reconciled and
-# consistency collects over local frames, 4 report writes.
-PIPELINE_JOBS = 31
+# table side, then the ordered take), 9 for the reconciled and
+# consistency collects over local frames (each side alignment is a union
+# + one groupBy, one shuffle), 4 report writes.
+PIPELINE_JOBS = 30
 
 
 def _config(dbs) -> JobConfig:

@@ -8,8 +8,7 @@ the values pinned in ``tests/golden/rows_only_sf0.001.json``.
 Usage: python tools/parity.py [sf_dir] [query ...]
 
 ``SPARK_GRAFT_VANILLA=1`` runs on a bare session with none of
-``session.py``'s configs; ``SPARK_GRAFT_NO_BHJ=1`` disables broadcast
-joins.
+``session.py``'s configs.
 """
 
 from __future__ import annotations
@@ -49,14 +48,6 @@ def main() -> int:
         from hive_scripts_spark.session import get_spark
 
         spark = get_spark("parity")
-    if os.environ.get("SPARK_GRAFT_NO_BHJ"):
-        # 100 TB posture soak: at lake scale the big sides never fit the
-        # broadcast threshold, so AQE's BHJ conversions all fall back to
-        # shuffle joins — every query must be VALUE-identical that way.
-        # (Explicit broadcast() hints on genuinely-bounded sides — dims,
-        # eval sets, O(partitions) frames — still apply; those are sized
-        # by construction, not by threshold.)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_views(sf_dir)
 

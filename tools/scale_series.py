@@ -7,7 +7,7 @@ counts, schema-matched to TESTDATA.md, deterministic hash/trig
 generation — no RNG state, same rows every run), and record per
 query × scale:
 
-* ``sec`` — min-of-reps wall of a noop-sink write (the sweep.py
+* ``sec`` — min-of-reps wall of a noop-sink write (bench.py's
   statistic), with the kept rep's CPU-steal alongside;
 * ``exchanges`` / ``bhj`` / ``smj`` — executed-plan (AQE-final)
   exchange count and join-strategy split (a broadcast→shuffle flip as
@@ -88,8 +88,8 @@ def _steal_ticks() -> int:
 
 def _shuffle_totals(spark):
     """Cumulative (write, read) shuffle bytes across completed stages
-    (same AppStatusStore source as scale_probe.py — plan SQLMetrics
-    read zero under AQE stage reuse)."""
+    (the AppStatusStore: plan SQLMetrics read zero under AQE stage
+    reuse)."""
     store = spark.sparkContext._jsc.sc().statusStore()
     empty = spark.sparkContext._jvm.java.util.ArrayList()
     ds = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
