@@ -368,6 +368,61 @@ def cmd_audio(args: argparse.Namespace) -> int:
     return 0
 
 
+def _centroids(emb, args: argparse.Namespace):
+    """The coarse quantizer ``(centroid_id, centroid array<double>)``
+    that ``semdedup`` and ``balance`` share (:func:`_add_centroid_args`):
+    the first ``--nlist`` vectors by ``vec_id`` by default,
+    ``--train-sample N`` Lloyd-trains on the driver from the first N
+    vectors, and ``--train-full ITERS`` runs distributed Lloyd over the
+    whole table (it overrides ``--train-sample``)."""
+    from pyspark.sql import functions as F
+
+    from hive_scripts_spark.operators.similarity import kmeans_fit, train_kmeans
+
+    to_double = F.transform("embedding", lambda x: x.cast("double"))
+    if args.train_full:
+        return kmeans_fit(emb, k=args.nlist, iters=args.train_full)
+    if args.train_sample:
+        pts = [
+            [float(x) for x in r["embedding"]]
+            for r in emb.select(to_double.alias("embedding"))
+            .orderBy("vec_id")
+            .limit(args.train_sample)
+            .collect()
+        ]
+        cents = train_kmeans(pts, k=args.nlist)
+        return emb.sparkSession.createDataFrame(
+            [(i, c) for i, c in enumerate(cents)],
+            "centroid_id long, centroid array<double>",
+        )
+    return emb.orderBy("vec_id").limit(args.nlist).select(
+        F.col("vec_id").alias("centroid_id"), to_double.alias("centroid")
+    )
+
+
+def _add_centroid_args(p: argparse.ArgumentParser) -> None:
+    """``--nlist``, ``--train-sample`` and ``--train-full``: the centroid
+    choice :func:`_centroids` reads."""
+    p.add_argument("--nlist", type=int, default=64, help="coarse cells")
+    p.add_argument(
+        "--train-sample",
+        type=int,
+        default=None,
+        metavar="N",
+        help="Lloyd-train centroids from the first N vectors "
+        "(default: first --nlist vectors ARE the centroids)",
+    )
+    p.add_argument(
+        "--train-full",
+        type=int,
+        default=None,
+        metavar="ITERS",
+        help="distributed Lloyd over the FULL table for ITERS "
+        "iterations (one map-only pass per iteration; overrides "
+        "--train-sample)",
+    )
+
+
 def cmd_semdedup(args: argparse.Namespace) -> int:
     """SemDeDup as a command: semantic near-dup removal over the
     embeddings table (arXiv:2303.09540). Centroids default to the first
@@ -377,37 +432,12 @@ def cmd_semdedup(args: argparse.Namespace) -> int:
     deterministic N-vector sample instead. Writes the survivor frame
     ``(vec_id, centroid_id, centroid_sim)`` as parquet and prints the
     kept/dropped counts."""
-    from pyspark.sql import functions as F
-
-    from hive_scripts_spark.operators.similarity import (
-        kmeans_fit,
-        semantic_dedup,
-        train_kmeans,
-    )
+    from hive_scripts_spark.operators.similarity import semantic_dedup
     from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-semdedup")
     emb = load_sf_table(spark, args.db, "embeddings")
-    to_double = F.transform("embedding", lambda x: x.cast("double"))
-    if getattr(args, "train_full", None):
-        centroids = kmeans_fit(emb, k=args.nlist, iters=args.train_full)
-    elif args.train_sample:
-        pts = [
-            [float(x) for x in r["embedding"]]
-            for r in emb.select(to_double.alias("embedding"))
-            .orderBy("vec_id")
-            .limit(args.train_sample)
-            .collect()
-        ]
-        cents = train_kmeans(pts, k=args.nlist)
-        centroids = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)],
-            "centroid_id long, centroid array<double>",
-        )
-    else:
-        centroids = emb.orderBy("vec_id").limit(args.nlist).select(
-            F.col("vec_id").alias("centroid_id"), to_double.alias("centroid")
-        )
+    centroids = _centroids(emb, args)
     survivors = semantic_dedup(
         emb,
         centroids,
@@ -434,38 +464,15 @@ def cmd_balance(args: argparse.Namespace) -> int:
     or ``--train-sample N`` to Lloyd-train. Writes the picked frame
     ``(vec_id, centroid_id, sim, pick_order)`` as parquet and prints
     the per-cell balance report."""
-    from pyspark.sql import functions as F
-
     from hive_scripts_spark.operators.similarity import (
         cluster_balance_report,
         cluster_balanced_sample,
-        kmeans_fit,
-        train_kmeans,
     )
     from hive_scripts_spark.sources.readers import table as load_sf_table
 
     spark = get_spark("hive-scripts-spark-balance")
     emb = load_sf_table(spark, args.db, "embeddings")
-    to_double = F.transform("embedding", lambda x: x.cast("double"))
-    if getattr(args, "train_full", None):
-        centroids = kmeans_fit(emb, k=args.nlist, iters=args.train_full)
-    elif args.train_sample:
-        pts = [
-            [float(x) for x in r["embedding"]]
-            for r in emb.select(to_double.alias("embedding"))
-            .orderBy("vec_id")
-            .limit(args.train_sample)
-            .collect()
-        ]
-        cents = train_kmeans(pts, k=args.nlist)
-        centroids = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)],
-            "centroid_id long, centroid array<double>",
-        )
-    else:
-        centroids = emb.orderBy("vec_id").limit(args.nlist).select(
-            F.col("vec_id").alias("centroid_id"), to_double.alias("centroid")
-        )
+    centroids = _centroids(emb, args)
     picked = cluster_balanced_sample(emb, centroids, cap_per_cell=args.cap)
     picked.write.mode("overwrite").parquet(args.output)
     n_total = emb.count()
@@ -1434,17 +1441,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     sd.add_argument("--db", required=True, help="dir containing embeddings.parquet")
     sd.add_argument("--output", required=True, help="survivor parquet directory")
-    sd.add_argument("--nlist", type=int, default=64, help="coarse cells")
     sd.add_argument(
         "--threshold", type=float, default=0.95, help="near-dup cosine"
-    )
-    sd.add_argument(
-        "--train-sample",
-        type=int,
-        default=None,
-        metavar="N",
-        help="Lloyd-train centroids from the first N vectors "
-        "(default: first --nlist vectors ARE the centroids)",
     )
     sd.add_argument(
         "--max-cell-size",
@@ -1453,15 +1451,7 @@ def main(argv: list[str] | None = None) -> int:
         help="enforced per-cell cap: hotter cells sub-block into "
         "hash-group pair tasks (exact — survivors unchanged)",
     )
-    sd.add_argument(
-        "--train-full",
-        type=int,
-        default=None,
-        metavar="ITERS",
-        help="distributed Lloyd over the FULL table for ITERS "
-        "iterations (one map-only pass per iteration; overrides "
-        "--train-sample)",
-    )
+    _add_centroid_args(sd)
     sd.set_defaults(fn=cmd_semdedup)
 
     bal = sub.add_parser(
@@ -1470,27 +1460,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     bal.add_argument("--db", required=True, help="dir containing embeddings.parquet")
     bal.add_argument("--output", required=True, help="picked parquet directory")
-    bal.add_argument("--nlist", type=int, default=64, help="coarse cells")
     bal.add_argument(
         "--cap", type=int, default=100, help="max vectors kept per cell"
     )
-    bal.add_argument(
-        "--train-sample",
-        type=int,
-        default=None,
-        metavar="N",
-        help="Lloyd-train centroids from the first N vectors "
-        "(default: first --nlist vectors ARE the centroids)",
-    )
-    bal.add_argument(
-        "--train-full",
-        type=int,
-        default=None,
-        metavar="ITERS",
-        help="distributed Lloyd over the FULL table for ITERS "
-        "iterations (one map-only pass per iteration; overrides "
-        "--train-sample)",
-    )
+    _add_centroid_args(bal)
     bal.set_defaults(fn=cmd_balance)
 
     mh = sub.add_parser(

@@ -413,25 +413,6 @@ def remove_repeated_spans(
     )
 
 
-def word_ngrams(text_col, n: int = 3):
-    """Array of word n-grams of normalized text (space-joined). Empty/short
-    docs yield an empty array.
-
-    NOTE: this is a raw Column expression — embedding it (or its result)
-    multiple times in one projection re-evaluates the whole split per
-    reference. Use :func:`shingle_sets` for anything performance-
-    sensitive; it stages the token array so each step runs once per row.
-    """
-    toks = F.split(normalize_whitespace(text_col), " ")
-    # slice windows [i, i+n) for i in 1..len-n+1 (1-based F.slice)
-    return F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
-
-
 def shingle_sets(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:

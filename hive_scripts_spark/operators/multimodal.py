@@ -41,7 +41,6 @@ plumbing-oracle queries and anywhere reproducible fixtures matter:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -83,24 +82,6 @@ def binarize(df: DataFrame, payload_col: str, id_col: str = "doc_id") -> DataFra
         F.lit("image").alias("modality"),
         F.octet_length(F.col(payload_col)).alias("byte_len"),
     )
-
-
-def _fake_decode(payload: bytes) -> tuple[str, int, int]:
-    """Deterministic fake decode: md5-derived (width, height).
-
-    Stands in for a real codec (PIL/libav NOT importable here). The
-    derivation is pure (bytes → md5 → dims) so Spark and a SQL oracle
-    agree on every row.
-
-    NOTE: kept for direct use/tests, but ``decode_image_meta`` inlines
-    this logic in its closure — a module-level function referenced from a
-    ``mapInPandas`` closure is pickled BY REFERENCE, and the driver's
-    Python workers (cwd outside this repo) cannot import the module.
-    """
-    digest = hashlib.md5(payload).hexdigest()
-    width = 1 + int(digest[:4], 16) % 1024
-    height = 1 + int(digest[4:8], 16) % 1024
-    return digest, width, height
 
 
 def decode_image_meta(

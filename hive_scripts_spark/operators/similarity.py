@@ -219,6 +219,11 @@ def embedding_near_dup_pairs(
     becomes the LSH knob). Callers whose semantics are
     exhaustive-by-contract (the ``x_embed_near_dup`` oracle twin) pass
     ``max_docs=None`` to force the exhaustive path.
+
+    The exhaustive path is :func:`_blocked_cosine_pairs` with no key
+    and 4096-row blocks — the kernel :func:`semantic_dedup` runs per
+    cell — so its cosines round to 6dp half away from zero, like the
+    DuckDB oracle's ``round``.
     """
     if not use_lsh and max_docs is not None:
         # bounded probe, not a full count: LocalLimit stops the scan
@@ -243,73 +248,108 @@ def embedding_near_dup_pairs(
             embeddings, threshold, id_col, vec_col, lsh_tables, lsh_bits,
             _xxhash64_planes,
         )
-    base = _staged_with_norms(embeddings, id_col, vec_col)
     # Exhaustive all-pairs, BLOCKED (r10): still O(n²) FLOPs — that is
     # this path's declared contract (the exactness baseline for the LSH
     # route) — but as bounded blocked-matmul tasks instead of a
     # BroadcastNestedLoopJoin evaluating an interpreted dim-length fold
-    # per pair. Same machinery as semantic_dedup's over-cap cells: the
-    # corpus hash-splits into g = ceil(n / block_rows) groups, each row
-    # replicates to its g unordered group-pair tasks, a (gi == gj) task
-    # emits its upper triangle and a cross task only cross pairs — every
-    # pair lands in EXACTLY ONE task, per-task input ≤ ~2×block_rows
-    # rows, and the n² work spreads over g(g+1)/2 parallel tasks instead
-    # of one nested-loop stage. Cosines round to 6dp like every exact
-    # path (boundary ulps vs a sequential fold are the numpy routes'
-    # documented tolerance — same status as semantic_dedup's edges).
+    # per pair: one global key, g = ceil(n / 4096) hash groups.
     # Measured at sf0.1 (10k vecs): 16.7 s (clean-window sweep) → ~3 s.
-    block_rows = 4096
-    ng = base.agg(
-        F.greatest(
-            F.lit(1), F.ceil(F.count(F.lit(1)) / block_rows)
-        )
-        .cast("int")
-        .alias("__ng")
-    ).withColumn("__one", F.lit(1))
-    rows = (
-        base.withColumn("__one", F.lit(1))
-        .join(F.broadcast(ng), "__one")
-        .select(
-            id_col,
-            "vec",
-            F.pmod(F.xxhash64(F.col(id_col)), F.col("__ng"))
-            .cast("int")
-            .alias("__g"),
-            "__ng",
-        )
+    base = _staged_with_norms(embeddings, id_col, vec_col)
+    return _blocked_cosine_pairs(
+        base, base.agg(F.count(F.lit(1)).alias("__n")), threshold, id_col, 4096
     )
-    tasks = rows.select(
+
+
+def _blocked_cosine_pairs(
+    rows: DataFrame,
+    sizes: DataFrame,
+    threshold: float,
+    id_col: str,
+    block_rows: int,
+    key: str | None = None,
+) -> DataFrame:
+    """Every pair of ``rows`` that shares ``key`` (all pairs when
+    ``key`` is None) whose 6dp-rounded cosine is ≥ ``threshold``, as
+    ``(a_id, b_id, cosine_sim)`` with ``a_id < b_id`` — the one blocked
+    all-pairs cosine kernel (exhaustive near-dup pairs, SemDeDup cells).
+
+    ``rows`` carries ``[key,] id_col, vec array<double>``; ``sizes``
+    carries ``[key,] __n``, the row count per key (one row without a
+    key), so a caller that already holds the counts does not rescan the
+    vectors. Each key's rows hash-split into g = max(1, ceil(__n /
+    block_rows)) groups ``__g = pmod(xxhash64(id), g)``; each row
+    replicates to its g unordered group-pair tasks ``(gi, gj)``. A
+    diagonal task (gi == gj) emits its upper triangle and a cross task
+    only cross-group pairs, so every pair lands in EXACTLY ONE task,
+    per-task input is ≤ ~2×block_rows rows, and the n² work spreads
+    over g(g+1)/2 parallel tasks. Under one block g = 1: one task per
+    key, no replication.
+
+    Each task is one numpy matmul per 2048-row slab over the id-sorted,
+    L2-normalised block (a JVM self-join verifies each candidate with
+    an interpreted dim-length fold — measured 234 s for ~31M candidate
+    pairs at 100k×512, vs seconds as matmul). Cosines round to 6dp
+    half away from zero, DuckDB's ``round``; boundary ulps vs the
+    engines' sequential fold are this route's documented tolerance.
+    """
+    keys = [key] if key else []
+    ng = sizes.select(
+        *keys,
+        F.greatest(F.lit(1), F.ceil(F.col("__n") / block_rows))
+        .cast("int")
+        .alias("__ng"),
+    )
+    if key is None:
+        # one global group count: join it to every row on a constant
+        rows = rows.withColumn("__one", F.lit(1))
+        ng = ng.withColumn("__one", F.lit(1))
+    tagged = rows.join(F.broadcast(ng), key or "__one").select(
+        *keys,
+        id_col,
+        "vec",
+        F.pmod(F.xxhash64(F.col(id_col)), F.col("__ng")).cast("int").alias("__g"),
+        "__ng",
+    )
+    tasks = tagged.select(
+        *keys,
         id_col,
         "vec",
         "__g",
         F.explode(F.sequence(F.lit(0), F.col("__ng") - 1)).alias("__p"),
     ).select(
+        *keys,
         id_col,
         "vec",
         "__g",
         F.least("__g", "__p").alias("__gi"),
         F.greatest("__g", "__p").alias("__gj"),
     )
-    id_dtype = embeddings.schema[id_col].dataType.simpleString()
+    id_dtype = rows.schema[id_col].dataType.simpleString()
     thr = float(threshold)
 
-    def pair_sims(key, pdf):
-        # self-contained: imports inside (pickles by value off-repo)
+    def pair_sims(task, pdf):
+        # self-contained: imports inside and no module-level name, so
+        # it pickles by value for drivers that run outside the repo
         import numpy as np
         import pandas as pd
 
-        gi, gj = key
-        empty = pd.DataFrame(
-            {
-                "a_id": pdf[id_col].to_numpy()[:0],
-                "b_id": pdf[id_col].to_numpy()[:0],
-                "cosine_sim": np.zeros(0),
-            }
-        )
+        gi, gj = task[-2:]
+        if len(pdf) > max(4 * block_rows, 1024):
+            # a task holds ≤ 2 hash groups of expected size ≤ block_rows
+            # each; group sizes are multinomial-concentrated, so 4×
+            # slack covers hash jitter while still failing loudly if the
+            # sub-blocking ever delivers a whole over-block key to one
+            # task (the quadratic straggler it exists to prevent)
+            raise ValueError(
+                f"blocked cosine-pairs task {task} got {len(pdf)} rows "
+                f"(block {block_rows}): sub-blocking invariant broken"
+            )
 
         def sorted_block(sub):
             ids = sub[id_col].to_numpy()
             order = np.argsort(ids)
+            # tolist + one np.array call beats a per-row asarray loop
+            # 11x (bit-identical float64); order applied to the matrix
             V = np.array(sub["vec"].tolist(), dtype=np.float64)[order]
             n = np.linalg.norm(V, axis=1)
             n[n == 0.0] = np.inf
@@ -327,36 +367,32 @@ def embedding_near_dup_pairs(
             # (test_graded_threshold_ulp_margin).
             return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
 
-        a_out, b_out, s_out = [], [], []
-        slab = 2048
         if gi == gj:
-            if len(pdf) < 2:
-                return empty
-            ids, Vn = sorted_block(pdf)
-            for s in range(0, len(ids), slab):
-                sims = r6(Vn[s : s + slab] @ Vn.T)
-                ii, jj = np.nonzero(sims >= thr)
-                g_row = ii + s
-                keep = g_row < jj
-                a_out.append(ids[g_row[keep]])
-                b_out.append(ids[jj[keep]])
-                s_out.append(sims[ii[keep], jj[keep]])
+            ids_l, Vl = sorted_block(pdf)
+            ids_r, Vr = ids_l, Vl
         else:
             left = pdf[pdf["__g"] == gi]
             right = pdf[pdf["__g"] == gj]
             if len(left) == 0 or len(right) == 0:
-                return empty
+                ids = pdf[id_col].to_numpy()[:0]
+                return pd.DataFrame(
+                    {"a_id": ids, "b_id": ids, "cosine_sim": np.zeros(0)}
+                )
             ids_l, Vl = sorted_block(left)
             ids_r, Vr = sorted_block(right)
-            for s in range(0, len(ids_l), slab):
-                sims = r6(Vl[s : s + slab] @ Vr.T)
-                ii, jj = np.nonzero(sims >= thr)
-                la, rb = ids_l[ii + s], ids_r[jj]
-                a_out.append(np.minimum(la, rb))
-                b_out.append(np.maximum(la, rb))
-                s_out.append(sims[ii, jj])
-        if not a_out:
-            return empty
+        a_out, b_out, s_out = [], [], []
+        slab = 2048
+        for s in range(0, len(ids_l), slab):
+            sims = r6(Vl[s : s + slab] @ Vr.T)
+            ii, jj = np.nonzero(sims >= thr)
+            if gi == gj:
+                # upper triangle: the block is id-sorted, so a < b
+                keep = ii + s < jj
+                ii, jj = ii[keep], jj[keep]
+            la, rb = ids_l[ii + s], ids_r[jj]
+            a_out.append(np.minimum(la, rb))
+            b_out.append(np.maximum(la, rb))
+            s_out.append(sims[ii, jj])
         return pd.DataFrame(
             {
                 "a_id": np.concatenate(a_out),
@@ -365,7 +401,7 @@ def embedding_near_dup_pairs(
             }
         )
 
-    return tasks.groupBy("__gi", "__gj").applyInPandas(
+    return tasks.groupBy(*keys, "__gi", "__gj").applyInPandas(
         pair_sims, f"a_id {id_dtype}, b_id {id_dtype}, cosine_sim double"
     )
 
@@ -914,7 +950,9 @@ def semantic_dedup(
     pairs-only) edge list. Cell sizes are the scale knob — size
     ``nlist`` so cells stay balanced (audit with
     :func:`ivf_cell_stats`); ``max_cell_size`` is the ENFORCED
-    backstop (r10, upgrading the r9 advisory): a cell above the cap is
+    backstop (r10, upgrading the r9 advisory): the intra-cell pairs
+    come from :func:`_blocked_cosine_pairs` keyed on ``centroid_id``
+    with ``max_cell_size`` as its block, so a cell above the cap is
     sub-blocked into ``g = ceil(size/cap)`` hash groups and its pair
     search fans out over the ``g*(g+1)/2`` unordered group pairs —
     every member pair lands in EXACTLY ONE task (the task of its
@@ -923,6 +961,10 @@ def semantic_dedup(
     degenerate one-hot-cell corpus parallelizes instead of becoming a
     single quadratic straggler. Under-cap cells take the g=1
     degenerate form of the same plan (one task, no replication).
+    Pair cosines round to 6dp half away from zero, as the exhaustive
+    :func:`embedding_near_dup_pairs` path and DuckDB's ``round`` do,
+    so a cosine on a .5e-6 tie meets the threshold here exactly when
+    it does there.
     Cross-cell near-duplicates are NOT detected — that recall loss is
     the method's documented approximation, bounded by clustering
     quality (measured on the fixed testdata in
@@ -976,119 +1018,16 @@ def semantic_dedup(
     )
     cells = staged.join(assigned.select(id_col, "centroid_id"), id_col)
     # Enforced cell cap: per-cell sizes come off the (checkpointed)
-    # assignment — |cells| ≤ nlist rows, so the join back is a broadcast
-    # by construction. g = ceil(size/cap) sub-groups per cell; each
-    # member replicates to its g unordered group-pair tasks. Under the
-    # cap g = 1: sequence(0, 0) explodes to a single row — no
-    # replication, one task per cell, the pre-cap plan shape.
+    # assignment, not a second scan of the vectors — |sizes| ≤ nlist
+    # rows, so the kernel's join back is a broadcast by construction.
+    # An over-cap cell sub-blocks into ceil(size/cap) hash groups; an
+    # under-cap cell is one task, the pre-cap plan shape.
     sizes = assigned.groupBy("centroid_id").agg(
-        F.ceil(F.count(F.lit(1)) / max_cell_size).cast("int").alias("__ng")
+        F.count(F.lit(1)).alias("__n")
     )
-    grouped = cells.join(F.broadcast(sizes), "centroid_id").select(
-        "centroid_id",
-        F.col(id_col),
-        "vec",
-        F.pmod(F.xxhash64(F.col(id_col)), F.col("__ng"))
-        .cast("int")
-        .alias("__g"),
-        "__ng",
-    )
-    tasks = grouped.select(
-        "centroid_id",
-        id_col,
-        "vec",
-        "__g",
-        F.explode(F.sequence(F.lit(0), F.col("__ng") - 1)).alias("__p"),
-    ).select(
-        "centroid_id",
-        id_col,
-        "vec",
-        "__g",
-        F.least("__g", "__p").alias("__gi"),
-        F.greatest("__g", "__p").alias("__gj"),
-    )
-    # Intra-cell pairing as ONE blocked numpy matmul per task
-    # (applyInPandas): a JVM self-join verifies each candidate with an
-    # interpreted 64-dim fold — measured 234 s for ~31M candidate pairs
-    # at 100k×512, vs seconds as matmul. The task key is (cell, gi, gj),
-    # so the shuffle carries each vector once per partner group; block
-    # rows bound the sim-matrix memory. A same-group task (gi == gj)
-    # emits its upper triangle; a cross-group task emits only
-    # cross-group pairs (within-group pairs belong to the diagonal
-    # tasks), so every pair is emitted exactly once. ids sort ascending
-    # so emitted pairs are (a_id < b_id) with no extra pass; cosines
-    # round to 6dp like every exact path (boundary ulps vs the
-    # sequential fold are this route's documented tolerance).
-    id_dtype = embeddings.schema[id_col].dataType.simpleString()
-
-    def cell_pairs(key, pdf):
-        import numpy as np
-        import pandas as pd
-
-        _, gi, gj = key
-        empty = pd.DataFrame(
-            {"a_id": pdf[id_col].to_numpy()[:0], "b_id": pdf[id_col].to_numpy()[:0]}
-        )
-        if len(pdf) > max(4 * max_cell_size, 1024):
-            # a task holds ≤ 2 hash groups of expected size ≤ cap each;
-            # group sizes are multinomial-concentrated, so 4×cap slack
-            # covers hash jitter while still failing loudly if the
-            # sub-blocking above ever delivers a whole over-cap cell to
-            # one task (the quadratic-straggler regression this cap
-            # exists to prevent)
-            raise ValueError(
-                f"semantic_dedup task {key} got {len(pdf)} rows "
-                f"(cap {max_cell_size}): sub-blocking invariant broken"
-            )
-
-        def sorted_block(sub):
-            ids = sub[id_col].to_numpy()
-            order = np.argsort(ids)
-            ids = ids[order]
-            # tolist + one np.array call beats a per-row asarray loop
-            # 11x (bit-identical float64); order applied to the matrix
-            V = np.array(sub["vec"].tolist(), dtype=np.float64)[order]
-            n = np.linalg.norm(V, axis=1)
-            n[n == 0.0] = np.inf
-            return ids, V / n[:, None]
-
-        a_out, b_out = [], []
-        block = 2048
-        if gi == gj:
-            if len(pdf) < 2:
-                return empty
-            ids, Vn = sorted_block(pdf)
-            for s in range(0, len(ids), block):
-                sims = np.round(Vn[s : s + block] @ Vn.T, 6)
-                ii, jj = np.nonzero(sims >= threshold)
-                g_row = ii + s
-                keep = g_row < jj
-                a_out.append(ids[g_row[keep]])
-                b_out.append(ids[jj[keep]])
-        else:
-            left = pdf[pdf["__g"] == gi]
-            right = pdf[pdf["__g"] == gj]
-            if len(left) == 0 or len(right) == 0:
-                return empty
-            ids_l, Vl = sorted_block(left)
-            ids_r, Vr = sorted_block(right)
-            for s in range(0, len(ids_l), block):
-                sims = np.round(Vl[s : s + block] @ Vr.T, 6)
-                ii, jj = np.nonzero(sims >= threshold)
-                la, rb = ids_l[ii + s], ids_r[jj]
-                lo = np.minimum(la, rb)
-                hi = np.maximum(la, rb)
-                a_out.append(lo)
-                b_out.append(hi)
-        if not a_out:
-            return empty
-        return pd.DataFrame(
-            {"a_id": np.concatenate(a_out), "b_id": np.concatenate(b_out)}
-        )
-
-    edges = tasks.groupBy("centroid_id", "__gi", "__gj").applyInPandas(
-        cell_pairs, f"a_id {id_dtype}, b_id {id_dtype}"
-    )
+    edges = _blocked_cosine_pairs(
+        cells, sizes, threshold, id_col, max_cell_size, key="centroid_id"
+    ).select("a_id", "b_id")
     # near_dup_survivors keeps MAX quality per component; the paper
     # keeps the LOWEST centroid cosine, so feed it the negated sim
     member_quality = assigned.select(

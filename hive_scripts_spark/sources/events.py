@@ -65,12 +65,6 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     )
 
 
-def load_events(spark: SparkSession, path: str) -> DataFrame:
-    """Batch read of an events parquet file/directory, ``ts`` normalized."""
-    pin_utc(spark)
-    return normalize_event_ts(spark.read.parquet(path))
-
-
 def event_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over an events parquet directory.
 

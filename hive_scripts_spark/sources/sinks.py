@@ -24,11 +24,6 @@ def run_output_dir(base_dir: str, run_date: datetime | None = None) -> str:
     return f"{base_dir.rstrip('/')}/{stamp}"
 
 
-def write_delimited_dir(df: DataFrame, path: str, sep: str = ",") -> None:
-    """S6: delimited-directory sink (the reference's sample-export shape)."""
-    df.write.mode("overwrite").option("sep", sep).csv(path)
-
-
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Hive-style partitioned parquet layout (``k1=v1/k2=v2`` directories
     — the on-disk shape the reference's ``SHOW PARTITIONS`` world assumes).

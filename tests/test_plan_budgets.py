@@ -54,6 +54,16 @@ BUDGETS = {
     "x_ann_lsh_portable": 3,
     "x_dedup_cross_near": 1,
     "x_split_leakage": 1,
+    # the blocked cosine-pairs kernel (similarity._blocked_cosine_pairs)
+    # behind both queries, counted at sf0.001. x_embed_near_dup: the
+    # global row count's SinglePartition merge + the (gi, gj) task
+    # grouping. x_dedup_semantic: the kernel's pairs are consumed by
+    # connected_components' eager checkpoints while the query is built,
+    # so the 5 are the survivor pick over the checkpointed frames (the
+    # member/label join's 2 sides, the per-component min, the semi-join's
+    # 2 sides).
+    "x_embed_near_dup": 2,
+    "x_dedup_semantic": 5,
 }
 
 

@@ -605,6 +605,36 @@ def test_semantic_dedup_cell_cap_exact(spark):
     assert len(capped) == 40  # one survivor per planted triple
 
 
+def test_semantic_dedup_and_exhaustive_pairs_agree_on_half_tie(spark):
+    """A pair whose numpy cosine sits exactly on a 6dp half tie rounds
+    the same way in SemDeDup's cells and on the exhaustive path: half
+    away from zero, like DuckDB's round(). Here the cosine is exactly
+    0.3500005; half-even np.round gives 0.35, below the 0.350001
+    threshold, while half-away gives 0.350001, which meets it."""
+    import numpy as np
+
+    c = 0.3500005
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [c, math.sqrt(1 - c * c)])],
+        "vec_id long, embedding array<double>",
+    )
+    # the premise: numpy's cosine is the tie itself, and the two
+    # rounding conventions land on opposite sides of the threshold
+    v = np.array([[1.0, 0.0], [c, math.sqrt(1 - c * c)]])
+    v /= np.linalg.norm(v, axis=1)[:, None]
+    assert (v[0] @ v[1]) == c and np.round(c, 6) == 0.35
+    one_centroid = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "centroid_id long, centroid array<double>"
+    )
+    kept = S.semantic_dedup(vecs, one_centroid, threshold=0.350001).collect()
+    # one component {0, 1}: 1 is farther from the centroid → survives
+    assert [r["vec_id"] for r in kept] == [1]
+    pairs = S.embedding_near_dup_pairs(
+        vecs, threshold=0.350001, use_lsh=False
+    ).collect()
+    assert [tuple(r) for r in pairs] == [(0, 1, 0.350001)]
+
+
 def test_semantic_dedup_recall_vs_exhaustive(spark):
     """Measured cross-cell recall loss on the graded configuration
     (VERDICT r9 item 8): exhaustive all-pairs ground truth at sf0.001
@@ -656,7 +686,9 @@ def test_graded_threshold_ulp_margin(sf):
     the gate under engine-ulp divergence. The fixed testdata margins
     (3.8e-5 / 2.9e-5 / 1.2e-6) clear that radius; this trips loudly if
     the driver ever regenerates embeddings with a boundary-straddling
-    pair — BEFORE the oracle row flakes."""
+    pair — BEFORE the oracle row flakes. Spark's own numpy pair paths
+    all round through one kernel (similarity._blocked_cosine_pairs,
+    half away from zero, like DuckDB)."""
     import duckdb
     import numpy as np
 
@@ -674,9 +706,12 @@ def test_graded_threshold_ulp_margin(sf):
     # 6dp-rounded cosine lands within 1e-6 of the gate (i.e. rounds
     # to exactly 0.350000), so a testdata regeneration cannot park a
     # pair ON the threshold where `>=` holds only by rounding luck.
-    # Checked under BOTH live conventions: half-even (np.round — the
-    # semdedup numpy paths) and scaled half-away (the exhaustive
-    # path's r6, measured bit-identical to DuckDB's round()).
+    # The numpy pair paths (SemDeDup cells and the exhaustive path)
+    # share one convention, the blocked kernel's scaled half-away r6,
+    # measured bit-identical to DuckDB's round() — the second assert.
+    # The half-even np.round check stays as a wider fence: a pair that
+    # clears both conventions cannot sit on a tie either engine or the
+    # recall test's np.round ground truth could read differently.
     assert np.abs(np.round(sims[iu], 6) - 0.35).min() >= 1e-6
     away = np.sign(sims[iu]) * np.floor(np.abs(sims[iu]) * 1e6 + 0.5) / 1e6
     assert np.abs(away - 0.35).min() >= 1e-6
